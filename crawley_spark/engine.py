@@ -17,7 +17,6 @@ reference driver loop (crawler.go:119-135). Never rely on partition order.
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -34,22 +33,6 @@ from .kernels.paths import can_parse, url_seen_key
 from .kernels.xxh import spark_xxhash64
 from .operators import bloom as bloomf
 from .operators.local_wave import process_wave
-
-
-def seen_filter_module():
-    """north_rule names a "partitioned Bloom/cuckoo URL-seen filter"; both
-    exist behind one module contract. ``CRAWLEY_SEEN_FILTER=cuckoo`` selects
-    the cuckoo-filter shards (operators/cuckoo.py — better FP rate at high
-    load, mergeable fingerprint tables); default is the Bloom shards
-    (vectorized build, the throughput choice). Resolved per crawl() call;
-    the choice must stay constant across resume runs of one crawl (shard
-    bytes are not interchangeable — cuckoo shards are magic-tagged and fail
-    loudly on mismatch)."""
-    if os.environ.get("CRAWLEY_SEEN_FILTER", "bloom") == "cuckoo":
-        from .operators import cuckoo as mod
-
-        return mod
-    return bloomf
 from .operators.politeness import salt_hot_hosts, schedule
 from .operators.seen import anti_join_seen, first_occurrence
 from .plans.ordering import advance_offsets, assign_flagged_indexes_bucketed
@@ -174,7 +157,6 @@ def crawl(
     max_iterations: int = 10_000,
     resume: bool = False,
     salt_k: int = 0,
-    bloom_prefilter: bool = True,
     bloom_min_seen: int = 200_000,
     broadcast_frontier_rows: int = 500_000,
     semi_broadcast_rows: int = 250_000,
@@ -203,7 +185,15 @@ def crawl(
       falls back to a shuffle anti-join against the pruned buckets.
     * Bloom inactive (small seen): seen ≤ ``direct_broadcast_seen_rows``
       is broadcast directly into the anti-join; only a small-seen ×
-      huge-wave corner pays a shuffle.
+      huge-wave corner pays a shuffle. A ``bloom_min_seen`` no crawl
+      reaches keeps the prefilter off for the whole crawl.
+
+    Every Spark iteration's metrics rows record the seen check it ran
+    (``bloom_maybe``, ``bloom_false_positives``, ``seen_buckets_read``, and
+    ``seen_rows_scanned`` — parquet-footer rows of the seen shards the
+    bucket-pruned join scanned, -1 on waves where it did not run) plus the
+    phase times ``index_ms`` (plan + index pass) and ``drain_ms`` (joining
+    the previous iteration's writes and committing its manifest).
 
     broadcast_frontier_rows: frontier rows below which the fetch join
     broadcasts the frontier side. 500k rows × ~150 B/row ≈ 75 MB — sized to
@@ -242,7 +232,6 @@ def crawl(
     runs keep the pure-Spark loop. ``driver_wave_rows=0`` disables the
     hybrid entirely (tests pinning the distributed machinery do this).
     """
-    bloomf = seen_filter_module()  # Bloom (default) or cuckoo seen-prefilter
     runs = _normalize_runs(seeds, config)
     pages_n = normalize_pages(pages)
     state = CrawlState(spark, checkpoint_dir)
@@ -299,9 +288,6 @@ def crawl(
     def parts_for(rows: int) -> int:
         return max(1, min(max_parts, int(rows // rows_per_task) + 1))
 
-    import os as _os
-
-    debug_timing = _os.environ.get("CRAWLEY_DEBUG_TIMING") == "1"
     # localCheckpoint blocks are non-reliable: an executor lost between
     # iterations (cluster mode / dynamic allocation) would lose them with a
     # truncated lineage — carry the in-memory frontier plan only where that
@@ -319,18 +305,15 @@ def crawl(
     # regardless of compaction) into the shards, and from then on each
     # iteration appends its wave's shard delta before the manifest commit —
     # so the invariant also survives resume at any point.
-    bloom_merged: dict = {}
-    bloom_bc = None
-    seen_total = 0
-    bloom_upto = -1
-    if bloom_prefilter:
-        shard_rows = [
+    bloom_merged = bloomf.merge_bitmaps(
+        [
             (r["bucket"], bytes(r["bitmap"]))
             for r in state._read_upto("blooms", BLOOM_STATE_SCHEMA, iteration).collect()
         ]
-        bloom_merged = bloomf.merge_bitmaps(shard_rows)
-        seen_total = state.seen(upto=iteration).count()
-        bloom_upto = state.manifest.get("bloom_upto", iteration if resume else 0)
+    )
+    bloom_bc = None
+    seen_total = state.seen(upto=iteration).count()
+    bloom_upto = state.manifest.get("bloom_upto", iteration if resume else 0)
 
     # Pipelined finalize (per-iteration floor): the previous iteration's
     # table writes / lineage collect / compaction / bloom-shard job stay in
@@ -417,7 +400,7 @@ def crawl(
             p["seq_offsets"],
             done=p["done"],
             seen_compact=new_compact,
-            bloom_upto=bloom_upto if bloom_prefilter else None,
+            bloom_upto=bloom_upto,
         )
         p["candidates"].unpersist()
         return deferred_n
@@ -493,16 +476,9 @@ def crawl(
                     iteration, rank_offsets, seq_offsets, done=out["enq_n"] == 0
                 )
                 rank_lo = prev_rank_hi
-                frontier_rows_in = frontier_rows
                 driver_frontier = out["frontier"]
                 frontier_rows = out["enq_n"]
                 carry_frontier = None
-                if debug_timing:
-                    print(
-                        f"[iter {iteration}] frontier_in={frontier_rows_in}"
-                        f" driver_path total={time.monotonic() - t0:.2f}s",
-                        flush=True,
-                    )
                 continue
             driver_frontier = None  # consumed: the Spark path re-collects a small tail
             iteration += 1
@@ -563,14 +539,13 @@ def crawl(
             # covered), and the oversized broadcast never happens.
             if carry_seen_delta is not None and carry_seen_rows > semi_broadcast_rows:
                 _drain_pending()
-            bloom_active = bloom_prefilter and seen_total >= bloom_min_seen
+            bloom_active = seen_total >= bloom_min_seen
             firsts = first_occurrence(candidates)
             flags = ["emit_ok", "enqueue_ok"]
             offs = {"emit_ok": seq_offsets, "enqueue_ok": rank_offsets}
             keys = ["run_id", "url_key"]
             maybe_rows, seen_buckets_read, seen_rows_scanned = 0, None, -1
-            if bloom_prefilter:
-                firsts = bloomf.with_bloom_hashes(with_bucket(firsts))
+            firsts = bloomf.with_bloom_hashes(with_bucket(firsts))
             if bloom_active and bloom_upto < (
                 iteration - 2 if pending is not None else iteration - 1
             ):
@@ -628,10 +603,9 @@ def crawl(
                     # metric must not re-resolve dirs against the post-drain
                     # manifest, whose compact pointer may differ and whose
                     # superseded snapshot dirs get deleted (ADVICE r02)
-                    if _os.environ.get("CRAWLEY_SEEN_METRICS") == "1":
-                        seen_rows_scanned = state.count_parquet_rows(
-                            state.seen_dirs(seen_upto, seen_buckets_read)
-                        )
+                    seen_rows_scanned = state.count_parquet_rows(
+                        state.seen_dirs(seen_upto, seen_buckets_read)
+                    )
                     seen_side = state.seen(
                         upto=seen_upto, buckets=seen_buckets_read
                     ).select(*keys)
@@ -716,14 +690,9 @@ def crawl(
             next_frontier = fresh_frontier.unionByName(
                 deferred.select("run_id", "rank", "url", "host", "can_fetch")
             ).coalesce(parts_for(enq_n))
-            if bloom_prefilter:
-                seen_df = indexed.select(
-                    "run_id", "url_key", F.col("uri").alias("url"), "bucket"
-                ).coalesce(parts_for(emit_n + enq_n))
-            else:
-                seen_df = with_bucket(
-                    indexed.select("run_id", "url_key", F.col("uri").alias("url"))
-                ).coalesce(parts_for(emit_n + enq_n))
+            seen_df = indexed.select(
+                "run_id", "url_key", F.col("uri").alias("url"), "bucket"
+            ).coalesce(parts_for(emit_n + enq_n))
 
             # 7+8. drain the PREVIOUS iteration's futures (they had a whole
             # index pass to finish in the background — normally a no-wait join),
@@ -778,6 +747,8 @@ def crawl(
                 (iteration, "emitted", "", sum(emit_counts.values())),
                 (iteration, "enqueued", "", enq_total),
                 (iteration, "dropped_overflow", "", dropped_overflow),
+                (iteration, "index_ms", "", int(t_index * 1000)),
+                (iteration, "drain_ms", "", int(t_drain * 1000)),
                 (iteration, "wall_ms", "", int((time.monotonic() - t0) * 1000)),
             ]
             pending = {
@@ -816,7 +787,6 @@ def crawl(
                 if deferred_n == 0 and all(q is None for q in quotas.values()) and can_carry
                 else None
             )
-            frontier_rows_in = frontier_rows
             frontier_rows = enq_n + deferred_n
             if pending is not None:
                 pending["done"] = frontier_rows == 0
@@ -845,13 +815,6 @@ def crawl(
                         driver_frontier_fut = pool.submit(
                             lambda df=next_frontier: [tuple(r) for r in df.collect()]
                         )
-            if debug_timing:
-                print(
-                    f"[iter {iteration}] frontier_in={frontier_rows_in}"
-                    f" index_pass={t_index:.2f}s drain={t_drain:.2f}s"
-                    f" total={time.monotonic() - t0:.2f}s",
-                    flush=True,
-                )
 
         _drain_pending()
     finally:
@@ -926,10 +889,8 @@ def _bootstrap(spark, state: CrawlState, pages_n, runs):
         SEEN_SCHEMA,
     )
     state.write_local("frontier", 0, frontier_rows, FRONTIER_SCHEMA)
-    build_shards_local = seen_filter_module().build_shards_local
-
     state.write_local_binary(
-        "blooms", 0, build_shards_local([(r, k) for r, k, _ in seen_rows])
+        "blooms", 0, bloomf.build_shards_local([(r, k) for r, k, _ in seen_rows])
     )
     state.write_local(
         "metrics", 0, [(0, "bootstrap_frontier", "", len(frontier_rows))], METRICS_SCHEMA

@@ -46,8 +46,6 @@ Two scale-critical optimizations live here (both exact, not approximate):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import types as T
 
 CANDIDATES_SCHEMA = T.StructType(
@@ -82,8 +80,8 @@ def _arrow_schema():
 # Bound the per-partition combine dict; when exceeded the partition flushes
 # early (partial combine — the downstream window keeps exactness). Sized so
 # a 128 MB corpus partition's unique links fit comfortably.
-_COMBINE_FLUSH = int(os.environ.get("CRAWLEY_COMBINE_FLUSH", "2000000"))
-_MEMO_MAX = int(os.environ.get("CRAWLEY_CLASSIFY_MEMO_MAX", "1000000"))
+_COMBINE_FLUSH = 2_000_000
+_MEMO_MAX = 1_000_000
 
 
 def build_extract_candidates(cfgs: dict, seeds: dict, robots: dict):

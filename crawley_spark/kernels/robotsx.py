@@ -11,6 +11,7 @@ path membership (robots.go:66-76), not prefix match.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 MODE_ALLOW_ALL = "allow_all"
@@ -18,6 +19,8 @@ MODE_GOT_RULES = "got_rules"
 MODE_DENY_ALL = "deny_all"
 
 ROBOTS_PATH = "/robots.txt"
+# Crawl-delay values: plain ASCII decimal seconds
+_DECIMAL_SECONDS = re.compile(r"[0-9]+(?:\.[0-9]+)?")
 
 
 @dataclass
@@ -128,10 +131,12 @@ def crawl_delay_ms(ua: str, body: str):
     (``v == '*' or v in ua``, parser.go:85), extended with the
     'crawl-delay'/'crawldelay' key. The LAST directive in an applicable
     group wins (deterministic under the same last-writer convention the
-    reference applies to repeated groups); values are non-negative
-    decimal seconds, ``floor(x * 1000 + 0.5)`` milliseconds (one IEEE
-    parse + one multiply — engine-identical); directives before any UA
-    line or in non-matching groups are ignored."""
+    reference applies to repeated groups); values are plain ASCII decimal
+    seconds (``[0-9]+(.[0-9]+)?`` — no sign, exponent, digit separator,
+    inf or nan, all of which ``float`` alone would accept),
+    ``floor(x * 1000 + 0.5)`` milliseconds (one IEEE parse + one multiply
+    — engine-identical); directives before any UA line or in non-matching
+    groups are ignored."""
     import math
 
     active = False
@@ -151,10 +156,9 @@ def crawl_delay_ms(ua: str, body: str):
         if key in ("useragent", "user-agent"):
             active = val == "*" or val in ua
         elif key in ("crawl-delay", "crawldelay") and active:
-            try:
-                x = float(val)
-            except ValueError:
+            if not _DECIMAL_SECONDS.fullmatch(val):
                 continue
-            if x >= 0 and math.isfinite(x):
+            x = float(val)
+            if math.isfinite(x):  # a 400-digit value still parses to inf
                 out = int(math.floor(x * 1000 + 0.5))
     return out

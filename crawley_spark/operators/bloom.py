@@ -1,6 +1,7 @@
-"""Partitioned Bloom shards for the URL-seen filter (north_rule: "each
-iteration joins the frontier against a partitioned Bloom/cuckoo URL-seen
-filter keyed by a 64-bit xxhash of crawley's canonicalized-URL form").
+"""Partitioned Bloom shards for the URL-seen filter — the crawl's only seen
+prefilter (north_rule: "each iteration joins the frontier against a
+partitioned Bloom/cuckoo URL-seen filter keyed by a 64-bit xxhash of
+crawley's canonicalized-URL form").
 
 Correctness story: the Bloom pass is a *prefilter* — candidates whose key is
 definitely-not-in-bloom skip the exact anti-join entirely; "maybe seen" rows
@@ -51,6 +52,14 @@ def _bit_positions(h1: np.ndarray, h2: np.ndarray) -> list:
     return out
 
 
+def _bitmap(h1: np.ndarray, h2: np.ndarray) -> bytes:
+    """One shard's bits for the uint64 hash pairs (h1, h2)."""
+    bits = np.zeros(BLOOM_BITS_PER_BUCKET // 8, dtype=np.uint8)
+    for idx in _bit_positions(h1, h2):
+        np.bitwise_or.at(bits, idx >> 3, np.uint8(1) << (idx & 7).astype(np.uint8))
+    return bits.tobytes()
+
+
 def build_shards(new_keys: DataFrame) -> DataFrame:
     """(bucket, bitmap) per bucket present in new_keys; new_keys needs
     bucket + _bh1 + _bh2 columns."""
@@ -58,12 +67,9 @@ def build_shards(new_keys: DataFrame) -> DataFrame:
     def build(key, pdf):
         import pandas as pd
 
-        bits = np.zeros(BLOOM_BITS_PER_BUCKET // 8, dtype=np.uint8)
         h1 = pdf["_bh1"].values.astype("int64").view(np.uint64)
         h2 = pdf["_bh2"].values.astype("int64").view(np.uint64)
-        for idx in _bit_positions(h1, h2):
-            np.bitwise_or.at(bits, idx >> 3, np.uint8(1) << (idx & 7).astype(np.uint8))
-        return pd.DataFrame({"bucket": [int(key[0])], "bitmap": [bits.tobytes()]})
+        return pd.DataFrame({"bucket": [int(key[0])], "bitmap": [_bitmap(h1, h2)]})
 
     return new_keys.select("bucket", "_bh1", "_bh2").groupBy("bucket").applyInPandas(
         build, BLOOM_SCHEMA
@@ -82,15 +88,16 @@ def build_shards_local(rows: list) -> list:
         h1 = xxh64(kb, xxh64(rb, 42))
         h2 = xxh64(rb, xxh64(kb, 42))
         by_bucket.setdefault(bucket, []).append((h1, h2))
-    out = []
-    for bucket, hs in by_bucket.items():
-        bits = np.zeros(BLOOM_BITS_PER_BUCKET // 8, dtype=np.uint8)
-        h1 = np.array([h[0] for h in hs], dtype=np.uint64)
-        h2 = np.array([h[1] for h in hs], dtype=np.uint64)
-        for idx in _bit_positions(h1, h2):
-            np.bitwise_or.at(bits, idx >> 3, np.uint8(1) << (idx & 7).astype(np.uint8))
-        out.append((int(bucket), bits.tobytes()))
-    return out
+    return [
+        (
+            int(bucket),
+            _bitmap(
+                np.array([h[0] for h in hs], dtype=np.uint64),
+                np.array([h[1] for h in hs], dtype=np.uint64),
+            ),
+        )
+        for bucket, hs in by_bucket.items()
+    ]
 
 
 def merge_bitmaps(shards: list) -> dict:
@@ -98,11 +105,14 @@ def merge_bitmaps(shards: list) -> dict:
     merged: dict = {}
     for bucket, bm in shards:
         if bytes(bm[:4]) == b"CKF1":
+            # manifests older than the layout record (state.current_layout)
+            # have only this magic to stop cuckoo shards being OR-ed into
+            # a bitmap
             raise ValueError(
-                "seen-filter shard is a cuckoo filter (CKF1 magic) but the "
-                "Bloom backend is selected — this state was written with "
-                "CRAWLEY_SEEN_FILTER=cuckoo; the filter choice must not "
-                "change across resume runs of one crawl."
+                "seen-filter shard is a cuckoo filter (CKF1 magic): this "
+                "checkpoint was written with the cuckoo prefilter, which this "
+                "build cannot read (Bloom is the only seen prefilter); start "
+                "a fresh checkpoint."
             )
         arr = np.frombuffer(bm, dtype=np.uint8)
         if bucket in merged:

@@ -70,17 +70,16 @@ def current_layout() -> dict:
     """The physical-layout parameters a checkpoint depends on. Persisted in
     the manifest at bootstrap; resume compares against the live process and
     refuses to continue under a different layout (the seen table's bucket
-    dirs, the Bloom/cuckoo shard geometry, and the filter kind are all baked
-    into bytes on disk — only the filter kind previously had a loud guard,
-    the CKF1 shard magic)."""
+    dirs and the Bloom shard geometry are baked into bytes on disk).
+    ``seen_filter`` is a constant: Bloom is the only seen prefilter, and the
+    record makes a checkpoint stamped by an older cuckoo-filter build fail
+    the resume check instead of OR-ing its shards into Bloom bitmaps."""
     from ..operators.bloom import BLOOM_BITS_PER_BUCKET
-    from ..operators.cuckoo import _nb
 
     return {
         "seen_buckets": SEEN_BUCKETS,
         "bloom_bits_per_bucket": BLOOM_BITS_PER_BUCKET,
-        "cuckoo_buckets_per_shard": _nb(),
-        "seen_filter": os.environ.get("CRAWLEY_SEEN_FILTER", "bloom"),
+        "seen_filter": "bloom",
     }
 
 RESULTS_SCHEMA = T.StructType(
@@ -255,9 +254,10 @@ class CrawlState:
                     f"under a different physical layout ({detail}). Resuming "
                     "would silently mis-prune bucket-partitioned seen reads "
                     "and re-emit duplicates; restore the original "
-                    "CRAWLEY_SEEN_BUCKETS / CRAWLEY_BLOOM_BITS_PER_BUCKET / "
-                    "CRAWLEY_CUCKOO_BUCKETS_PER_SHARD / CRAWLEY_SEEN_FILTER "
-                    "settings (or start a fresh checkpoint)."
+                    "CRAWLEY_SEEN_BUCKETS / CRAWLEY_BLOOM_BITS_PER_BUCKET "
+                    "settings, or start a fresh checkpoint (a seen_filter "
+                    "mismatch means a cuckoo-filter checkpoint, which this "
+                    "build cannot resume)."
                 )
         return True
 
@@ -361,7 +361,7 @@ class CrawlState:
     @staticmethod
     def count_parquet_rows(dirs: list) -> int:
         """Driver-side row count from parquet footers only (no data read) —
-        instrumentation for the seen-scan metrics (CRAWLEY_SEEN_METRICS)."""
+        instrumentation for the ``seen_rows_scanned`` metric."""
         import pyarrow.parquet as pq
 
         total = 0

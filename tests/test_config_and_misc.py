@@ -98,7 +98,7 @@ def test_robots_crawl_equals_respect():
 
 def test_manifest_layout_guard(tmp_path):
     """ADVICE r03 (medium): the checkpoint manifest records the physical
-    layout (seen buckets, Bloom/cuckoo shard geometry, filter kind) at
+    layout (seen buckets, Bloom shard geometry, filter kind) at
     bootstrap; resuming under a different layout raises loudly instead of
     silently mis-pruning bucket-partitioned seen reads."""
     import json
@@ -122,6 +122,21 @@ def test_manifest_layout_guard(tmp_path):
     st3 = CrawlState(None, str(tmp_path))
     with pytest.raises(ValueError, match="layout mismatch"):
         st3.load_manifest()
+
+    # a Bloom checkpoint from a build that still recorded the cuckoo shard
+    # geometry resumes (keys the process no longer records are not compared)
+    m["layout"] = dict(current_layout(), cuckoo_buckets_per_shard=4096)
+    with open(st.manifest_path, "w") as f:
+        json.dump(m, f)
+    assert CrawlState(None, str(tmp_path)).load_manifest()
+
+    # a checkpoint stamped by the removed cuckoo prefilter must not resume
+    # into Bloom shards
+    m["layout"] = dict(current_layout(), seen_filter="cuckoo", cuckoo_buckets_per_shard=4096)
+    with open(st.manifest_path, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="seen_filter: checkpoint='cuckoo'"):
+        CrawlState(None, str(tmp_path)).load_manifest()
 
     # pre-r04 manifest (no layout field): back-compat, loads without check
     del m["layout"]

@@ -161,8 +161,8 @@ def test_resume_mid_crawl(spark, tmp_path):
     [
         dict(bloom_min_seen=0),  # bucket-pruned broadcast semi-join path
         dict(bloom_min_seen=0, semi_broadcast_rows=0),  # pruned shuffle fallback
-        dict(bloom_prefilter=False, direct_broadcast_seen_rows=0),  # plain shuffle anti-join
-        dict(bloom_prefilter=False),  # broadcast-seen anti-join (small seen)
+        dict(bloom_min_seen=10**9, direct_broadcast_seen_rows=0),  # plain shuffle anti-join
+        dict(bloom_min_seen=10**9),  # broadcast-seen anti-join (small seen)
     ],
     ids=["semi_join", "pruned_shuffle", "plain_shuffle", "broadcast_seen"],
 )

@@ -358,6 +358,8 @@ def test_robots_crawl_delay_kernel():
         ("User-agent: *\nCrawl-delay:", None),  # empty value dropped
         ("User-agent: *\nCrawl-delay: 2\nCrawl-delay: oops", 2000),  # invalid later keeps prior
         ("User-agent: *\r\nCrawl-delay: 6", 6000),  # CRLF splitlines
+        ("User-agent: *\nCrawl-delay: 1e3", None),  # float() would give 1000 s
+        ("User-agent: *\nCrawl-delay: 1_5", None),  # float() would give 15 s
     ]
     for body, want in cases:
         assert crawl_delay_ms(ua, body) == want, (body, want)

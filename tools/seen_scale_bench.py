@@ -1,7 +1,7 @@
 """Evidence harness for the seen anti-join scale fix (VERDICT r01 #1).
 
-Runs a synthetic-corpus crawl with CRAWLEY_SEEN_METRICS=1 and prints a
-per-iteration table:
+Runs a synthetic-corpus crawl and prints a per-iteration table from its
+metrics:
 
     iter  frontier  maybe  buckets  seen_scanned  seen_total  wall_ms
 
@@ -28,8 +28,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-os.environ["CRAWLEY_SEEN_METRICS"] = "1"
 
 
 def main():
