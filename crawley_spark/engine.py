@@ -33,7 +33,7 @@ from .kernels.paths import can_parse, url_seen_key
 from .kernels.xxh import spark_xxhash64
 from .operators import bloom as bloomf
 from .operators.local_wave import process_wave
-from .operators.politeness import salt_hot_hosts, schedule
+from .operators.politeness import salt_hot_hosts, schedule, schedule_rows
 from .operators.seen import anti_join_seen, first_occurrence
 from .plans.ordering import advance_offsets, assign_flagged_indexes_bucketed
 from .sources.pages import normalize_pages
@@ -228,9 +228,12 @@ def crawl(
     keys: fresh crawls start with it (bootstrap is driver-side already),
     each Spark wave's keys merge back asynchronously while small, and the
     first wave overflowing the cap disables it permanently (pure Spark from
-    then on). Deferral (politeness quotas), ``frontier_cap``, and resume
-    runs keep the pure-Spark loop. ``driver_wave_rows=0`` disables the
-    hybrid entirely (tests pinning the distributed machinery do this).
+    then on). Politeness quotas are driver-eligible: the gate counts the
+    rows the wave will fetch (``schedule_rows``' ``now`` split), and the
+    deferred rest stays in the driver frontier, bounded by the cap like
+    every frontier row (all of them are in seen). ``frontier_cap`` and
+    resume runs keep the pure-Spark loop. ``driver_wave_rows=0`` disables
+    the hybrid entirely (tests pinning the distributed machinery do this).
     """
     runs = _normalize_runs(seeds, config)
     pages_n = normalize_pages(pages)
@@ -266,9 +269,10 @@ def crawl(
     robots_rules = {r: v[0] for r, v in _collect_robots(spark, pages_n, runs).items()}
     extract_fn = build_extract_candidates(cfgs, seeds_map, robots_rules)
 
-    # low edge of the current frontier's rank span per run (exact when no
-    # deferral is carried; resume/deferral fall back to 0, which only widens
-    # the index-pass bucket range, never changes results)
+    # low edge of the current frontier's rank span per run (exact after
+    # driver waves and after Spark waves that defer nothing; resume starts at
+    # 0 and a deferring Spark wave keeps the old edge, which only widens the
+    # index-pass bucket range, never changes results)
     rank_lo = {run: 0 for run in runs}
     carry_frontier = None
     iteration = start_iter - 1
@@ -338,13 +342,10 @@ def crawl(
     # (run_id, url_key) set — fresh crawls start with it (bootstrap is
     # driver-side); it is None (permanently) once any wave would push it past
     # driver_seen_cap, and never exists on resume (rebuild would cost the
-    # Spark job the path is meant to avoid). Deferral and frontier_cap keep
-    # the pure-Spark loop — their semantics live in the Spark operators.
-    hybrid_ok = (
-        driver_wave_rows > 0
-        and frontier_cap is None
-        and all(q is None for q in quotas.values())
-    )
+    # Spark job the path is meant to avoid). Quotas are driver-eligible
+    # (schedule_rows is the driver twin of schedule); frontier_cap keeps the
+    # pure-Spark loop — its semantics live in the Spark index pass.
+    hybrid_ok = driver_wave_rows > 0 and frontier_cap is None
     driver_seen: set | None = boot_seen if hybrid_ok else None
     driver_frontier: list | None = boot_frontier if hybrid_ok else None
     driver_seen_n = len(driver_seen) if driver_seen is not None else 0
@@ -410,11 +411,11 @@ def crawl(
             if driver_frontier is None and driver_frontier_fut is not None:
                 driver_frontier = driver_frontier_fut.result() if driver_seen is not None else None
                 driver_frontier_fut = None
-            if (
-                driver_seen is not None
-                and driver_frontier is not None
-                and len(driver_frontier) <= driver_wave_rows
-            ):
+            now_rows = None
+            if driver_seen is not None and driver_frontier is not None:
+                # gate on the rows this wave fetches, not the whole frontier
+                now_rows, deferred_rows = schedule_rows(driver_frontier, quotas)
+            if now_rows is not None and len(now_rows) <= driver_wave_rows:
                 # -- driver-local iteration (operators/local_wave.py) --
                 # one Spark job total: the pushed-down url IN (...) page
                 # fetch; extraction/dedup/ordering run in-process against the
@@ -425,7 +426,7 @@ def crawl(
                 for f in driver_seen_futs:
                     driver_seen.update(f.result())
                 driver_seen_futs = []
-                urls = sorted({r[2] for r in driver_frontier if r[4]})
+                urls = sorted({r[2] for r in now_rows if r[4]})
                 by_url: dict = {}
                 if urls:
                     for r in pages_n.filter(F.col("url").isin(urls)).collect():
@@ -434,11 +435,10 @@ def crawl(
                         )
                 page_rows = [
                     (r[0], r[1], r[2], html, ct)
-                    for r in driver_frontier
+                    for r in now_rows
                     if r[4]
                     for html, ct in by_url.get(r[2], ())
                 ]
-                prev_rank_hi = dict(rank_offsets)
                 out = process_wave(
                     page_rows, driver_seen, iteration, seq_offsets,
                     rank_offsets, cfgs, seeds_map, robots_rules, SEEN_BUCKETS,
@@ -450,8 +450,11 @@ def crawl(
                     # was exact through this wave (state already durable), so
                     # hand off to pure Spark permanently
                     driver_seen = None
+                # deferred rows carry over with their old ranks, as in the
+                # Spark path's fresh ∪ deferred snapshot
+                next_frontier_rows = out["frontier"] + deferred_rows
                 state.write_local("results", iteration, out["results"], RESULTS_SCHEMA)
-                state.write_local("frontier", iteration, out["frontier"], FRONTIER_SCHEMA)
+                state.write_local("frontier", iteration, next_frontier_rows, FRONTIER_SCHEMA)
                 state.write_local("seen", iteration, out["seen"], SEEN_SCHEMA)
                 seen_total += out["wave_rows"]
                 if frontier_rows > 0 and out["cand_rows"] > 0:
@@ -462,7 +465,7 @@ def crawl(
                     [
                         (iteration, "lineage_partition_candidates", "-1", out["cand_total"]),
                         (iteration, "candidates", "", out["cand_total"]),
-                        (iteration, "deferred", "", 0),
+                        (iteration, "deferred", "", len(deferred_rows)),
                         (iteration, "frontier_in", "", frontier_rows),
                         (iteration, "emitted", "", out["emit_n"]),
                         (iteration, "enqueued", "", out["enq_n"]),
@@ -473,11 +476,14 @@ def crawl(
                     METRICS_SCHEMA,
                 )
                 state.commit(
-                    iteration, rank_offsets, seq_offsets, done=out["enq_n"] == 0
+                    iteration, rank_offsets, seq_offsets, done=not next_frontier_rows
                 )
-                rank_lo = prev_rank_hi
-                driver_frontier = out["frontier"]
-                frontier_rows = out["enq_n"]
+                # exact low edge of the next frontier's rank span per run
+                rank_lo = dict(rank_offsets)
+                for r in next_frontier_rows:
+                    rank_lo[r[0]] = min(rank_lo[r[0]], r[1])
+                driver_frontier = next_frontier_rows
+                frontier_rows = len(next_frontier_rows)
                 carry_frontier = None
                 continue
             driver_frontier = None  # consumed: the Spark path re-collects a small tail
@@ -811,7 +817,9 @@ def crawl(
                             }
                         )
                     )
-                    if 0 < frontier_rows <= driver_wave_rows and deferred_n == 0:
+                    # a frontier this small fetches at most this many rows
+                    # (deferred rows included: the driver wave re-splits it)
+                    if 0 < frontier_rows <= driver_wave_rows:
                         driver_frontier_fut = pool.submit(
                             lambda df=next_frontier: [tuple(r) for r in df.collect()]
                         )

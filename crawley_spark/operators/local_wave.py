@@ -27,7 +27,12 @@ first wave past ``driver_seen_cap`` invalidates it permanently and the
 crawl is pure-Spark from then on. A 100-TB crawl therefore uses it for
 exactly the iterations where the cluster would otherwise idle behind the
 driver, and never holds more than ``driver_seen_cap`` keys in driver
-memory.
+memory. Politeness quotas are driver-eligible: the engine splits the
+frontier with operators/politeness.schedule_rows (the driver twin of
+``schedule``), gates on the ``now`` rows and carries the deferred rest in
+the driver frontier — every frontier row is in seen, so that backlog is
+bounded by the same cap. ``frontier_cap`` and resume keep the pure-Spark
+loop.
 """
 
 from __future__ import annotations

@@ -621,19 +621,7 @@ def _jpeg_decode_arith_luma(data: bytes) -> float:
     for my in range(mcuy):
         for mx in range(mcux):
             if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                # scan to the next marker INCLUDING RSTn (_jpeg_skip_entropy
-                # deliberately steps over restarts, so it can't be used here)
-                pos = dec.bp
-                while True:
-                    pos = data.find(0xFF, pos)
-                    if pos < 0 or pos + 1 >= len(data):
-                        raise ValueError("truncated JPEG entropy-coded segment")
-                    if data[pos + 1] != 0x00:
-                        break
-                    pos += 2
-                if not 0xD0 <= data[pos + 1] <= 0xD7:
-                    raise ValueError("expected JPEG restart marker")
-                dec = _QMDecoder(data, pos + 2)
+                dec = _QMDecoder(data, _restart_marker_end(data, dec.bp))
                 dc_stats, ac_stats, fixed_bin = fresh_stats()
                 dc_context = {cid: 0 for cid, *_ in sc}
                 pred = {cid: 0 for cid, *_ in sc}
@@ -963,6 +951,29 @@ def jpeg_decode_luma(data: bytes) -> float:
     return float(crop.mean()) / maxval
 
 
+def _restart_marker_end(data: bytes, pos: int) -> int:
+    """Offset just past the next RSTn marker at or after ``pos`` in an
+    entropy-coded segment (_jpeg_skip_entropy deliberately steps over
+    restarts, so it can't be used here). 0xFF00 pairs are stuffed data;
+    any run of 0xFF fill bytes before the marker code is skipped (T.81
+    B.1.1.2), as in the marker walk. Raises ValueError if the segment ends
+    first or the marker is not RSTn."""
+    while True:
+        pos = data.find(0xFF, pos)
+        if pos < 0:
+            raise ValueError("truncated JPEG entropy-coded segment")
+        while pos + 1 < len(data) and data[pos + 1] == 0xFF:
+            pos += 1  # fill byte
+        if pos + 1 >= len(data):
+            raise ValueError("truncated JPEG entropy-coded segment")
+        if data[pos + 1] != 0x00:
+            break
+        pos += 2
+    if not 0xD0 <= data[pos + 1] <= 0xD7:
+        raise ValueError("expected JPEG restart marker")
+    return pos + 2
+
+
 def _jpeg_skip_entropy(data: bytes, pos: int) -> int:
     """Advance past entropy-coded data to the next true marker. Inside a
     scan, 0xFF can only be followed by 0x00 (stuffing) or 0xD0-0xD7
@@ -1290,19 +1301,6 @@ def _jpeg_decode_arith_prog_scan(
             {cid: 0 for cid, _ in scan},
         )
 
-    def restart_seek():
-        posn = dec.bp
-        while True:
-            posn = data.find(0xFF, posn)
-            if posn < 0 or posn + 1 >= len(data):
-                raise ValueError("truncated JPEG entropy-coded segment")
-            if data[posn + 1] != 0x00:
-                break
-            posn += 2
-        if not 0xD0 <= data[posn + 1] <= 0xD7:
-            raise ValueError("expected JPEG restart marker")
-        return _QMDecoder(data, posn + 2)
-
     if ss == 0:
         interleaved = len(scan) > 1
         members = []
@@ -1332,7 +1330,7 @@ def _jpeg_decode_arith_prog_scan(
         )
         for uy, ux in units:
             if restart_interval and n_unit and n_unit % restart_interval == 0:
-                dec = restart_seek()
+                dec = _QMDecoder(data, _restart_marker_end(data, dec.bp))
                 dc_stats, dc_context, pred = fresh_dc()
                 fixed = [113, 0]
             n_unit += 1
@@ -1356,7 +1354,7 @@ def _jpeg_decode_arith_prog_scan(
         for row in range(y_bh):
             for col in range(y_bw):
                 if restart_interval and n_unit and n_unit % restart_interval == 0:
-                    dec = restart_seek()
+                    dec = _QMDecoder(data, _restart_marker_end(data, dec.bp))
                     ac_stats = [[0, 0] for _ in range(256)]
                     fixed = [113, 0]
                 n_unit += 1

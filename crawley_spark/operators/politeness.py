@@ -12,8 +12,10 @@ Semantics: deferral never changes the final URL-seen set or per-URL results
 order, so parity runs use an unlimited budget (no deferral).
 
 Skew handling: the slot window partitions by (run, host); assignment is
-rank-stable. The subsequent fetch join is salted by ``salt_hot_hosts`` so one
-hot host's quota of fetches does not pin a single task.
+rank-stable. Driver-local waves (operators/local_wave.py) split the same
+way with :func:`schedule_rows`, the pure-Python twin over frontier tuples.
+The subsequent fetch join is salted by ``salt_hot_hosts`` so one hot host's
+quota of fetches does not pin a single task.
 """
 
 from __future__ import annotations
@@ -64,6 +66,25 @@ def schedule(
     deferred = slotted.filter(~cond).drop("_slot")
     if pre_deferred is not None:
         deferred = deferred.unionByName(pre_deferred)
+    return now, deferred
+
+
+def schedule_rows(rows: list, quotas: dict) -> tuple[list, list]:
+    """Driver twin of :func:`schedule` over frontier tuples
+    ``(run_id, rank, url, host, can_fetch)``: per (run, host) the first
+    ``quota`` rows by rank go into ``now``, the rest are deferred (a None
+    quota is unlimited). With no quotas the frontier comes back unchanged.
+    Same split as the Spark window (pinned in tests), so a driver-local
+    wave fetches exactly the rows a Spark wave would."""
+    if not any(q is not None for q in quotas.values()):
+        return rows, []
+    slots: dict = {}
+    now, deferred = [], []
+    for r in sorted(rows, key=lambda r: r[1]):
+        q = quotas[r[0]]
+        key = (r[0], r[3])
+        slots[key] = slot = slots.get(key, 0) + 1
+        (now if q is None or slot <= q else deferred).append(r)
     return now, deferred
 
 

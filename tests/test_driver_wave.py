@@ -5,8 +5,9 @@ pure-Python extract/dedup/order over the exact driver-resident seen set)
 and big waves on Spark. These tests pin that hybrid ≡ pure-Spark ≡
 interpreter byte-for-byte — emission order, seen set, and state tables —
 across all-driver runs, mixed driver↔Spark transitions in both directions,
-the seen-cap overflow handoff, and resume (which never uses the driver
-path but must read driver-written state).
+the seen-cap overflow handoff, politeness quotas (the driver splits each
+wave with schedule_rows), and resume (which never uses the driver path but
+must read driver-written state).
 """
 
 import pytest
@@ -151,17 +152,77 @@ def test_multi_run_hybrid(spark):
     report.state.cleanup()
 
 
-def test_quotas_disable_hybrid(spark):
-    """Politeness deferral semantics live in the Spark operators; any quota
-    keeps the crawl pure-Spark."""
+def _deferred(report):
+    return {
+        r["iter"]: r["value"]
+        for r in report.metrics().filter("metric = 'deferred'").collect()
+    }
+
+
+@pytest.mark.parametrize("driver_wave_rows", [256, 2], ids=["all_driver", "spark_handback"])
+def test_quotas_hybrid_matches_pure_spark_state(spark, driver_wave_rows):
+    """Politeness quotas run driver-local waves (schedule_rows gates on the
+    rows fetched now, the deferred rest stays in the driver frontier) with
+    the pure-Spark loop's exact state: results, seen, every frontier
+    snapshot, the per-iteration deferred metric and the manifest offsets.
+    ``driver_wave_rows=2`` sits below the quota's now size (3 per host), so
+    Spark waves that deferred rows hand back to driver waves."""
     pages = synth_site()
-    cfg = CrawlConfig(depth=1, no_head=True, delay_ms=100)
-    report = spark_crawl(
-        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
-        politeness_budget_ms=300,
+    cfg = CrawlConfig(depth=-1, no_head=True, scan_js=True, delay_ms=100)
+    df = pages_to_df(spark, pages)
+    kw = {"politeness_budget_ms": 300}
+    hy = spark_crawl(
+        spark, df, "http://h0.example", cfg, driver_wave_rows=driver_wave_rows, **kw
     )
-    assert not _driver_iters(report)
-    report.state.cleanup()
+    ps = spark_crawl(spark, df, "http://h0.example", cfg, driver_wave_rows=0, **kw)
+    rows = lambda d: sorted(tuple(r) for r in d.collect())
+    for table in ("results", "seen"):
+        assert rows(getattr(hy, table)("run0")) == rows(getattr(ps, table)("run0")), table
+    assert hy.iterations == ps.iterations
+    for i in range(hy.iterations + 1):
+        assert rows(hy.state.frontier(i)) == rows(ps.state.frontier(i)), f"frontier {i}"
+    deferred = _deferred(hy)
+    assert deferred == _deferred(ps)
+    assert any(v > 0 for v in deferred.values()), "no deferral exercised"
+    for k in ("rank_offsets", "seq_offsets"):
+        assert hy.state.manifest[k] == ps.state.manifest[k], k
+    driver_iters = _driver_iters(hy)
+    assert driver_iters, "quota crawl never took the driver path"
+    if driver_wave_rows == 2:
+        spark_iters = set(range(1, hy.iterations + 1)) - driver_iters
+        assert any(
+            deferred[i] > 0 and i + 1 in driver_iters for i in spark_iters
+        ), (f"no deferring Spark wave handed back to the driver: driver={driver_iters}"
+            f" deferred={deferred}")
+    hy.state.cleanup()
+    ps.state.cleanup()
+
+
+def test_quotas_resume_after_driver_deferral(spark, tmp_path):
+    """A polite crawl killed after driver waves that wrote deferred rows
+    resumes (pure-Spark by design) from the driver-written snapshot and
+    reaches the interpreter's emitted and seen sets."""
+    pages = synth_site()
+    cfg = CrawlConfig(depth=-1, no_head=True, delay_ms=100)
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    ck = str(tmp_path / "ck")
+    kw = {"checkpoint_dir": ck, "politeness_budget_ms": 300}
+    partial = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        max_iterations=3, **kw,
+    )
+    assert partial.iterations == 3
+    deferred = _deferred(partial)
+    assert any(deferred[i] > 0 for i in _driver_iters(partial)), (
+        f"no driver wave deferred rows before the kill: {deferred}"
+    )
+    resumed = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg, resume=True, **kw
+    )
+    assert not _driver_iters(resumed) - _driver_iters(partial)
+    assert set(resumed.result_urls("run0")) == set(want.results)
+    got_seen = {r["url_key"]: r["url"] for r in resumed.seen("run0").collect()}
+    assert got_seen == want.seen
 
 
 def test_resume_reads_driver_written_state(spark, tmp_path):

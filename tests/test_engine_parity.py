@@ -92,14 +92,17 @@ def test_multi_run(spark):
     report.state.cleanup()
 
 
-def test_politeness_deferral_preserves_sets(spark):
+@pytest.mark.parametrize("driver_wave_rows", [256, 0], ids=["hybrid", "pure_spark"])
+def test_politeness_deferral_preserves_sets(spark, driver_wave_rows):
     """Quota-based deferral must not change the URL-seen set or the emitted
-    URL *set* (order may shift — documented divergence, operators/politeness)."""
+    URL *set* (order may shift — documented divergence, operators/politeness).
+    Both the driver-local waves (schedule_rows) and the Spark schedule path."""
     pages = synth_site()
     cfg = CrawlConfig(depth=-1, no_head=True, delay_ms=100)
     want = interp.crawl(pages, "http://h0.example", cfg)
     report = spark_crawl(
-        spark, pages_to_df(spark, pages), "http://h0.example", cfg, politeness_budget_ms=300
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        politeness_budget_ms=300, driver_wave_rows=driver_wave_rows,
     )
     assert set(report.result_urls("run0")) == set(want.results)
     got_seen = {r["url_key"] for r in report.seen("run0").collect()}
@@ -113,6 +116,14 @@ def test_politeness_deferral_preserves_sets(spark):
     report.state.cleanup()
 
 
+_POLITE_ROWS = (
+    [("run0", "mega", f"http://mega/{i:04d}", i) for i in range(300)]
+    + [("run0", "b", f"http://b/{i}", i) for i in range(7)]
+    + [("run1", "mega", f"http://mega/r1/{i:03d}", i) for i in range(40)]
+    + [("run1", "c", f"http://c/{i}", i) for i in range(3)]
+)
+
+
 def test_politeness_salted_precap_equals_unsalted(spark):
     """The big-wave salted pre-cap (schedule(salt_buckets=...)) must produce
     EXACTLY the unsalted (now, deferred) split — structural argument in the
@@ -120,13 +131,7 @@ def test_politeness_salted_precap_equals_unsalted(spark):
     true top-quota row survives its own bucket's top-quota."""
     from crawley_spark.operators.politeness import schedule
 
-    rows = (
-        [("run0", "mega", f"http://mega/{i:04d}", i) for i in range(300)]
-        + [("run0", "b", f"http://b/{i}", i) for i in range(7)]
-        + [("run1", "mega", f"http://mega/r1/{i:03d}", i) for i in range(40)]
-        + [("run1", "c", f"http://c/{i}", i) for i in range(3)]
-    )
-    f = spark.createDataFrame(rows, "run_id string, host string, url string, rank long")
+    f = spark.createDataFrame(_POLITE_ROWS, "run_id string, host string, url string, rank long")
     for quotas in ({"run0": 5, "run1": 2}, {"run0": 5, "run1": None}):
         for buckets in (8, 64, 1024):  # incl. buckets >> rows-per-host
             now_p, def_p = schedule(f, quotas)
@@ -134,6 +139,32 @@ def test_politeness_salted_precap_equals_unsalted(spark):
             key = lambda df: sorted(tuple(r) for r in df.collect())
             assert key(now_s) == key(now_p), (quotas, buckets)
             assert key(def_s) == key(def_p), (quotas, buckets)
+
+
+def test_schedule_rows_equals_schedule(spark):
+    """The driver twin schedule_rows (driver-local polite waves) gives
+    EXACTLY schedule's (now, deferred) split, unsalted and salted, on the
+    same multi-run / mega-host / None-quota rows."""
+    import random
+
+    from crawley_spark.operators.politeness import schedule, schedule_rows
+
+    f = spark.createDataFrame(_POLITE_ROWS, "run_id string, host string, url string, rank long")
+    # frontier tuples (run_id, rank, url, host, can_fetch), shuffled: the
+    # twin must order by rank itself, as the Spark window does
+    tuples = [(run, rank, url, host, True) for run, host, url, rank in _POLITE_ROWS]
+    random.Random(7).shuffle(tuples)
+    url_keys = lambda rows: sorted((r[0], r[2]) for r in rows)
+    df_keys = lambda df: sorted((r["run_id"], r["url"]) for r in df.collect())
+    for quotas in ({"run0": 5, "run1": 2}, {"run0": 5, "run1": None}):
+        now_r, def_r = schedule_rows(tuples, quotas)
+        assert len(now_r) + len(def_r) == len(tuples)
+        for buckets in (None, 64):
+            now_s, def_s = schedule(f, quotas, salt_buckets=buckets)
+            assert url_keys(now_r) == df_keys(now_s), (quotas, buckets)
+            assert url_keys(def_r) == df_keys(def_s), (quotas, buckets)
+    # no quotas: the frontier comes back unchanged, nothing deferred
+    assert schedule_rows(tuples, {"run0": None, "run1": None}) == (tuples, [])
 
 
 def test_resume_mid_crawl(spark, tmp_path):

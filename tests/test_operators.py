@@ -3793,6 +3793,17 @@ def _jpeg_encode_arith(planes, sampling, restart=0, precision=8, dac=True):
     return bytes(buf)
 
 
+def _rst_fill(data: bytes) -> bytes:
+    """Insert two 0xFF fill bytes before every RSTn marker of a scan (T.81
+    B.1.1.2 allows any number); entropy data holds 0xFF only as 0xFF00."""
+    import re
+
+    sos = data.find(b"\xff\xda")
+    out, n = re.subn(rb"\xff[\xd0-\xd7]", lambda m: b"\xff\xff" + m[0], data[sos:])
+    assert n, "no restart marker to pad"
+    return data[:sos] + out
+
+
 def test_jpeg_arith_decode():
     """SOF9 sequential arithmetic decode: gradient and flat grayscale
     planes must decode to EXACTLY the same mean luma as (a) the test-side
@@ -3825,8 +3836,11 @@ def test_jpeg_arith_decode():
     assert got == _jpeg_expected_luma(y)
     # restart interval: full coder + stats re-init per segment
     y = rng.integers(0, 256, size=(8, 40))  # 5 MCUs
-    got = jpeg_decode_luma(_jpeg_encode_arith([y], [(1, 1)], restart=2))
+    rst = _jpeg_encode_arith([y], [(1, 1)], restart=2)
+    got = jpeg_decode_luma(rst)
     assert got == _jpeg_expected_luma(y)
+    # 0xFF fill bytes before each RSTn decode the same
+    assert jpeg_decode_luma(_rst_fill(rst)) == got
     # DAC segment omitted: spec-default conditioning must apply
     got = jpeg_decode_luma(_jpeg_encode_arith([grad], [(1, 1)], dac=False))
     assert got == _jpeg_expected_luma(grad)
@@ -4152,6 +4166,7 @@ def test_jpeg_arith_progressive_decode():
     ]
     data = _jpeg_encode_arith_progressive([y2], [(1, 1)], gray, restart=2)
     assert jpeg_decode_luma(data) == jpeg_decode_luma(_jpeg_encode_baseline([y2], [(1, 1)]))
+    assert jpeg_decode_luma(_rst_fill(data)) == jpeg_decode_luma(data)
     # 12-bit
     y12 = (np.arange(8 * 16, dtype=np.int64).reshape(8, 16) * 131) % 4096
     data = _jpeg_encode_arith_progressive([y12], [(1, 1)], gray, precision=12)
