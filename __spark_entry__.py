@@ -4799,9 +4799,10 @@ _DUP_BY_SOURCE_ORACLE = """
 def _q_lang_confidence(spark, sf_dir):
     """Language-ID confidence margin (textstats.lang_id_confidence — the
     gate real pipelines apply before trusting a lang label): derived
-    corpus plants an exact one-marker en/fr tie on %19==0 (' the '+' le '
-    → margin 0, NOT confident, alphabetical pred 'en' — precisely the
-    doc the deterministic tie-break would otherwise decide arbitrarily)
+    corpus plants an exact one-marker en/fr/es tie on %19==0 (' the ',
+    ' le ', ' y ' → margin 0, NOT confident, alphabetical pred 'en' —
+    precisely the doc the deterministic tie-break would otherwise decide
+    arbitrarily)
     and an empty doc on %19==1 ('und', zero scores, not confident); the
     rest keep real text. Zero-shuffle JVM projection over the same
     generated marker counts as lang_id. HASH-EXACT: the oracle is

@@ -4,13 +4,14 @@ dataflow (SURVEY.md §3.4 lifecycle):
     gate → schedule → fetch-join → extract (Arrow UDF) → dedup → emit →
     enqueue → checkpoint
 
-The driver holds only O(#runs + #partitions) state (offsets, quotas); all
-per-URL work is executor-side. Every iteration commits frontier / seen /
-results / metrics snapshots through CrawlState, so a killed job resumes
-exactly (north_rule).
+Spark waves keep only O(#runs + #partitions) state on the driver (offsets,
+quotas) and run all per-URL work executor-side; driver-local small waves
+hold at most ``driver_seen_cap`` seen keys. Every iteration commits
+frontier / seen / results / metrics snapshots through CrawlState, so a
+killed job resumes exactly (north_rule).
 
 Crawl-order parity: emission seq and frontier ranks are materialized with an
-explicit range-partitioned order index (plans/ordering.py) following
+explicit rank-bucketed order index (plans/ordering.py) following
 (parent_rank, in-page ord) — the canonical workers=1 FIFO order of the
 reference driver loop (crawler.go:119-135). Never rely on partition order.
 """
@@ -33,7 +34,7 @@ from .kernels.paths import can_parse, url_seen_key
 from .kernels.xxh import spark_xxhash64
 from .operators import bloom as bloomf
 from .operators.local_wave import process_wave
-from .operators.politeness import salt_hot_hosts, schedule, schedule_rows
+from .operators.politeness import schedule, schedule_rows
 from .operators.seen import anti_join_seen, first_occurrence
 from .plans.ordering import advance_offsets, assign_flagged_indexes_bucketed
 from .sources.pages import normalize_pages
@@ -47,6 +48,21 @@ from .sources.state import (
     CrawlState,
     with_bucket,
 )
+
+# Frontier rows up to which the fetch join broadcasts the frontier side (and
+# the schedule skips its salted pre-cap). 500k rows × ~150 B/row ≈ 75 MB —
+# sized to stay well inside a default 1 GiB driver/executor headroom rather
+# than Spark's 10 MB auto threshold (the frontier is the *hot* dimension;
+# ADVICE r01 gated this on bytes, not a 2M-row cliff).
+BROADCAST_FRONTIER_ROWS = 500_000
+# Largest post-Bloom "maybe" key set, and largest carried seen delta, that
+# the seen check broadcasts; bigger maybe sets shuffle against the
+# bucket-pruned seen shards, a bigger carried delta is drained first.
+SEMI_BROADCAST_ROWS = 250_000
+# Largest seen table broadcast whole into the anti-join: the Bloom prefilter
+# engages at min(bloom_min_seen, BROADCAST_SEEN_ROWS), so the full seen table
+# is never shuffled.
+BROADCAST_SEEN_ROWS = 500_000
 
 
 @dataclass
@@ -156,11 +172,7 @@ def crawl(
     politeness_budget_ms: int | None = None,
     max_iterations: int = 10_000,
     resume: bool = False,
-    salt_k: int = 0,
     bloom_min_seen: int = 200_000,
-    broadcast_frontier_rows: int = 500_000,
-    semi_broadcast_rows: int = 250_000,
-    direct_broadcast_seen_rows: int = 500_000,
     compact_every: int = 8,
     frontier_cap: int | None = None,
     driver_wave_rows: int = 256,
@@ -173,33 +185,33 @@ def crawl(
     budget/delay (reference Q2 semantics, batch-shaped). None = no deferral
     (the reference never defers; parity runs use None).
 
-    Seen anti-join strategy (VERDICT r01 #1 — never shuffle the seen table):
+    Seen check (VERDICT r01 #1 — the full seen table is never shuffled).
+    Each Spark iteration takes one of three paths:
 
-    * Bloom active (seen ≥ bloom_min_seen): the post-Bloom "maybe" rows are
-      checked with a *bucket-pruned broadcast semi-join*: seen is read only
-      for the buckets present in maybe (Hive-partition pruning on the
-      seen layout), the tiny maybe key-set is broadcast, and the matching
-      seen keys (≤ |maybe|) are broadcast back for the anti-join — one
-      column-pruned scan of the touched shards, zero shuffle of seen. If
-      maybe exceeds ``semi_broadcast_rows`` (transitional huge waves), it
-      falls back to a shuffle anti-join against the pruned buckets.
-    * Bloom inactive (small seen): seen ≤ ``direct_broadcast_seen_rows``
-      is broadcast directly into the anti-join; only a small-seen ×
-      huge-wave corner pays a shuffle. A ``bloom_min_seen`` no crawl
-      reaches keeps the prefilter off for the whole crawl.
+    * ``broadcast`` — seen below ``min(bloom_min_seen,
+      BROADCAST_SEEN_ROWS)`` keys: the whole seen table (plus the pending
+      iteration's delta) is broadcast into the anti-join.
+    * ``bloom_semi`` — from that size on, the Bloom prefilter runs and its
+      post-Bloom "maybe" rows are checked with a *bucket-pruned broadcast
+      semi-join*: seen is read only for the buckets present in maybe
+      (Hive-partition pruning on the seen layout), the maybe key set is
+      broadcast, and the matching seen keys (≤ |maybe|) are broadcast back
+      for the anti-join — one column-pruned scan of the touched shards.
+    * ``bloom_shuffle`` — maybe above ``SEMI_BROADCAST_ROWS`` (transitional
+      huge waves): maybe takes a shuffle anti-join against the same
+      bucket-pruned shards.
 
-    Every Spark iteration's metrics rows record the seen check it ran
-    (``bloom_maybe``, ``bloom_false_positives``, ``seen_buckets_read``, and
+    A ``bloom_min_seen`` no crawl reaches keeps the prefilter off up to
+    ``BROADCAST_SEEN_ROWS`` keys.
+
+    Every iteration's metrics rows record its ``seen_path`` (one of the
+    three above, or ``driver`` for driver-local waves); Spark iterations
+    also record the seen check's figures (``bloom_maybe``,
+    ``bloom_false_positives``, ``seen_buckets_read``, and
     ``seen_rows_scanned`` — parquet-footer rows of the seen shards the
     bucket-pruned join scanned, -1 on waves where it did not run) plus the
     phase times ``index_ms`` (plan + index pass) and ``drain_ms`` (joining
     the previous iteration's writes and committing its manifest).
-
-    broadcast_frontier_rows: frontier rows below which the fetch join
-    broadcasts the frontier side. 500k rows × ~150 B/row ≈ 75 MB — sized to
-    stay well inside a default 1 GiB driver/executor headroom rather than
-    Spark's 10 MB auto threshold (the frontier is the *hot* dimension;
-    ADVICE r01 gated this on bytes, not a 2M-row cliff).
 
     compact_every: seen deltas are merged into one bucket-partitioned
     snapshot every this many iterations, bounding the per-read dir count.
@@ -303,12 +315,12 @@ def crawl(
     # Bloom shards (north_rule): definitely-new candidates skip the exact
     # anti-join. Invariant when the prefilter is ACTIVE: blooms cover every
     # seen delta ≤ bloom_upto and bloom_upto == previous iteration. Shards
-    # are built LAZILY: below bloom_min_seen no per-iteration shard job
-    # runs at all (the exact anti-join alone is cheaper); at activation a
-    # one-off catch-up folds the uncovered seen deltas (retained on disk
-    # regardless of compaction) into the shards, and from then on each
-    # iteration appends its wave's shard delta before the manifest commit —
-    # so the invariant also survives resume at any point.
+    # are built LAZILY: below min(bloom_min_seen, BROADCAST_SEEN_ROWS) no
+    # per-iteration shard job runs at all (the exact anti-join alone is
+    # cheaper); at activation a one-off catch-up folds the uncovered seen
+    # deltas (retained on disk regardless of compaction) into the shards, and
+    # from then on each iteration appends its wave's shard delta before the
+    # manifest commit — so the invariant also survives resume at any point.
     bloom_merged = bloomf.merge_bitmaps(
         [
             (r["bucket"], bytes(r["bitmap"]))
@@ -471,6 +483,7 @@ def crawl(
                         (iteration, "enqueued", "", out["enq_n"]),
                         (iteration, "dropped_overflow", "", 0),
                         (iteration, "driver_path", "", 1),
+                        (iteration, "seen_path", "driver", 1),
                         (iteration, "wall_ms", "", int((time.monotonic() - t0) * 1000)),
                     ],
                     METRICS_SCHEMA,
@@ -497,13 +510,13 @@ def crawl(
             else:
                 frontier = state.frontier(iteration - 1)
 
-            # 1. politeness schedule (Q2) — big waves get the salted
-            # pre-cap (same gate as the fetch-join salting: a mega-host
-            # must not pin a single slot-window task)
+            # 1. politeness schedule (Q2) — waves too big to broadcast get the
+            # salted pre-cap (a mega-host must not pin a single slot-window
+            # task)
             now, deferred = schedule(
                 frontier,
                 quotas,
-                salt_buckets=64 if frontier_rows > broadcast_frontier_rows else None,
+                salt_buckets=64 if frontier_rows > BROADCAST_FRONTIER_ROWS else None,
             )
 
             # 2. fetch join (F1) — canParse-gated rows only reach the corpus scan.
@@ -511,14 +524,11 @@ def crawl(
             # either way (extraction skips null html), but inner lets Spark
             # broadcast the frontier side. Small waves broadcast explicitly (no
             # shuffle, no sort, host skew moot); huge frontiers take the
-            # sort-merge path against the bucketed corpus, salted against
-            # hot-host skew.
+            # sort-merge path against the bucketed corpus.
             fetchable = now.filter(F.col("can_fetch"))
-            if frontier_rows <= broadcast_frontier_rows:
+            if frontier_rows <= BROADCAST_FRONTIER_ROWS:
                 fetched = F.broadcast(fetchable).join(pages_n, on="url", how="inner")
             else:
-                if salt_k:
-                    fetchable = salt_hot_hosts(fetchable, salt_k)
                 fetched = fetchable.join(pages_n, on="url", how="inner")
 
             # 3. extract + classify (X1-X6, N1-N3, P1-P10) — one Arrow stage
@@ -533,19 +543,20 @@ def crawl(
 
             # 4. dedup (D2 in-wave, D1 vs seen): in-wave first occurrence, then
             # Bloom prefilter — definitely-new rows skip the exact anti-join.
-            # The prefilter engages only past bloom_min_seen; shards are built
-            # lazily (a one-off catch-up from the retained seen deltas at
-            # activation), so below the threshold no per-iteration shard job
-            # runs at all.
+            # The prefilter engages once seen reaches min(bloom_min_seen,
+            # BROADCAST_SEEN_ROWS) — past the latter seen is too big to
+            # broadcast whole; shards are built lazily (a one-off catch-up
+            # from the retained seen deltas at activation), so below the
+            # threshold no per-iteration shard job runs at all.
             # ADVICE r02 (medium): the pending iteration's seen delta rides along
             # in memory and is broadcast into the anti-join below; its row count
-            # is known exactly (it was that wave's index-pass count). Above the
-            # same threshold every other broadcast path honors, drain first —
-            # the delta becomes durable bucket-partitioned parquet (and bloom-
-            # covered), and the oversized broadcast never happens.
-            if carry_seen_delta is not None and carry_seen_rows > semi_broadcast_rows:
+            # is known exactly (it was that wave's index-pass count). Above
+            # SEMI_BROADCAST_ROWS, drain first — the delta becomes durable
+            # bucket-partitioned parquet (and bloom-covered), and the oversized
+            # broadcast never happens.
+            if carry_seen_delta is not None and carry_seen_rows > SEMI_BROADCAST_ROWS:
                 _drain_pending()
-            bloom_active = seen_total >= bloom_min_seen
+            bloom_active = seen_total >= min(bloom_min_seen, BROADCAST_SEEN_ROWS)
             firsts = first_occurrence(candidates)
             flags = ["emit_ok", "enqueue_ok"]
             offs = {"emit_ok": seq_offsets, "enqueue_ok": rank_offsets}
@@ -578,6 +589,7 @@ def crawl(
             # pending (its delta rides along in memory), else ≤ iteration-1
             seen_upto = iteration - 2 if pending is not None else iteration - 1
             if bloom_active:
+                seen_path = "bloom_semi"
                 if bloom_bc is None:
                     bloom_bc = spark.sparkContext.broadcast(bloom_merged)
                 # materialize the deduped+prefiltered wave once; one light agg
@@ -615,7 +627,7 @@ def crawl(
                     seen_side = state.seen(
                         upto=seen_upto, buckets=seen_buckets_read
                     ).select(*keys)
-                    if maybe_rows <= semi_broadcast_rows:
+                    if maybe_rows <= SEMI_BROADCAST_ROWS:
                         # seen is scanned (pruned shards, two columns) but never
                         # shuffled: maybe's keys broadcast in, the ≤|maybe| hits
                         # broadcast back out
@@ -626,19 +638,17 @@ def crawl(
                             maybe.join(F.broadcast(hits), on=keys, how="left_anti")
                         )
                     else:
+                        seen_path = "bloom_shuffle"
                         new_cands = fresh.unionByName(anti_join_seen(maybe, seen_side))
                 flags = flags + ["_maybe_seen"]  # free per-run counts via the index pass
                 offs = dict(offs, _maybe_seen={})
             else:
+                # seen < BROADCAST_SEEN_ROWS here: broadcast it whole
+                seen_path = "broadcast"
                 seen_side = state.seen(upto=seen_upto).select(*keys)
                 if carry_seen_delta is not None:
                     seen_side = seen_side.unionByName(carry_seen_delta.select(*keys))
-                if seen_total <= direct_broadcast_seen_rows:
-                    new_cands = firsts.join(
-                        F.broadcast(seen_side), on=keys, how="left_anti"
-                    )
-                else:
-                    new_cands = anti_join_seen(firsts, seen_side)
+                new_cands = firsts.join(F.broadcast(seen_side), on=keys, how="left_anti")
 
             # 5+6. one canonical-order pass assigns BOTH the emission seq and the
             # next-frontier rank (dense per flag); the localCheckpoint inside
@@ -741,6 +751,7 @@ def crawl(
             enq_total = sum(enq_counts.values())
             metric_rows = [
                 (iteration, "frontier_in", "", frontier_rows),
+                (iteration, "seen_path", seen_path, 1),
                 (iteration, "bloom_false_positives", "", sum(idx_counts.get("_maybe_seen", {}).values())),
                 (iteration, "bloom_maybe", "", maybe_rows),
                 (iteration, "seen_rows_scanned", "", seen_rows_scanned),

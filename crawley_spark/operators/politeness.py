@@ -14,8 +14,6 @@ order, so parity runs use an unlimited budget (no deferral).
 Skew handling: the slot window partitions by (run, host); assignment is
 rank-stable. Driver-local waves (operators/local_wave.py) split the same
 way with :func:`schedule_rows`, the pure-Python twin over frontier tuples.
-The subsequent fetch join is salted by ``salt_hot_hosts`` so one hot host's
-quota of fetches does not pin a single task.
 """
 
 from __future__ import annotations
@@ -31,8 +29,8 @@ def schedule(
 
     quotas: run_id → max fetches per host per iteration (None = unlimited).
 
-    ``salt_buckets`` (the engine passes it on big waves only — the same
-    gate as the fetch-join salting): a mega-host would put its whole row
+    ``salt_buckets`` (the engine passes it only on waves too big for the
+    broadcast fetch join): a mega-host would put its whole row
     set through one slot-window task, so a per-(run, host, url-salt)
     pre-cap first bounds any single task's sort and cuts the host to
     ≤ quota·salt_buckets survivors. The split is EXACTLY the unsalted
@@ -88,17 +86,6 @@ def schedule_rows(rows: list, quotas: dict) -> tuple[list, list]:
     return now, deferred
 
 
-def salt_hot_hosts(df: DataFrame, salt_k: int = 16) -> DataFrame:
-    """Explicit repartition on a salted host key before the fetch join
-    (north_rule): spreads a hot host's rows over ``salt_k`` partitions while
-    keeping co-residence for everything else."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    salted = F.concat_ws(
-        "#", F.col("host"), F.pmod(F.xxhash64(F.col("url")), F.lit(salt_k)).cast("string")
-    )
-    return df.repartition(n, salted)
-
-
 def crawl_delays(
     robots: DataFrame,
     ua: str,
@@ -122,8 +109,7 @@ def crawl_delays(
     Scale shape (100 TB): one Arrow-batched pass over a two-column
     pruned scan, ZERO shuffle — robots bodies are one row per host (the
     crawl fetches robots once per host), so this table is already tiny
-    next to the corpus; no shuffle is introduced here and the downstream
-    politeness join is the existing broadcast-or-salted path."""
+    next to the corpus and no shuffle is introduced here."""
     import pandas as pd
 
     from ..kernels.robotsx import crawl_delay_ms as _kernel

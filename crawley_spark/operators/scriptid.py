@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 
 # Published Unicode block ranges per script (BMP subset; inclusive).
 # Latin deliberately includes the Latin-1/Extended letters but NOT ASCII
-# digits/punctuation — counts are letter mass, so markup and numbers never
+# digits/punctuation nor the × (U+00D7) and ÷ (U+00F7) signs inside the
+# Latin-1 letter block — counts are letter mass, so markup and numbers never
 # vote for a script.
 SCRIPT_RANGES: dict[str, list[tuple[int, int]]] = {
     "arabic": [(0x0600, 0x06FF), (0x0750, 0x077F)],
@@ -35,7 +36,13 @@ SCRIPT_RANGES: dict[str, list[tuple[int, int]]] = {
     "hangul": [(0x1100, 0x11FF), (0xAC00, 0xD7A3)],
     "hebrew": [(0x0590, 0x05FF)],
     "kana": [(0x3040, 0x309F), (0x30A0, 0x30FF)],
-    "latin": [(0x0041, 0x005A), (0x0061, 0x007A), (0x00C0, 0x024F)],
+    "latin": [
+        (0x0041, 0x005A),
+        (0x0061, 0x007A),
+        (0x00C0, 0x00D6),
+        (0x00D8, 0x00F6),
+        (0x00F8, 0x024F),
+    ],
     "thai": [(0x0E00, 0x0E7F)],
 }
 

@@ -3,14 +3,17 @@
 The engine's crawl-order parity (SURVEY.md §3.4) hinges on materializing an
 explicit per-run FIFO index — never on partition order. A naive
 ``row_number() OVER (ORDER BY ...)`` funnels the whole dataset through one
-partition; ``assign_order_index`` instead:
+partition; ``assign_flagged_indexes_bucketed`` instead:
 
-1. range-partitions + sorts by the order key (parallel sort),
-2. counts rows per (partition, run) — one light job over the persisted input,
-3. cumulative-sums the counts on the driver (#partitions entries),
-4. adds partition-local row_numbers to the per-partition offsets.
+1. buckets rows arithmetically on the driver-known per-run span of the
+   leading order key (monotone, so ascending bucket == ascending order),
+2. computes in-bucket running counts with one window shuffle on
+   (run, bucket),
+3. counts rows per (run, bucket) — one light job over the checkpointed
+   result — and cumulative-sums the counts on the driver (#buckets entries),
+4. adds the per-bucket offsets to the running counts in a projection.
 
-This keeps the sort fully parallel and the driver state at O(#partitions),
+This keeps the work fully parallel and the driver state at O(#buckets),
 which survives a 1000-executor 10^10-row frontier; the reference's pending
 counter (crawler.go:119-135) has no distributed equivalent, this replaces it.
 """
@@ -50,69 +53,9 @@ def sql_long_array_map(d: dict) -> "F.Column":
     return F.expr(f"map({items})")
 
 
-def assign_order_index(
-    df: DataFrame,
-    order_cols: list,
-    out_col: str,
-    offsets: dict,
-    run_col: str = "run_id",
-):
-    """Add ``out_col`` = per-run 0-based dense index following ``order_cols``,
-    starting at ``offsets[run_id]`` (missing run → 0).
-
-    Returns ``(indexed_df, per_run_counts)`` where per_run_counts is
-    ``{run_id: rows_indexed}`` (the caller advances its offsets with it).
-
-    ``df`` should be persisted by the caller (two jobs read it).
-    """
-    spark = df.sparkSession
-    n = max(2, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-    keys = [run_col] + list(order_cols)
-    ranged = (
-        df.repartitionByRange(n, *[F.col(c) for c in keys])
-        .sortWithinPartitions(*keys)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    # materialize once: the counts job and the index job must see identical
-    # partition boundaries (range sampling re-runs per job otherwise)
-    ranged = ranged.localCheckpoint(eager=False)
-    counts = ranged.groupBy("_pid", run_col).count().collect()
-    # cumulative offsets per (pid, run): partitions are range-ordered on
-    # (run, order), so within a run ascending pid == ascending order key
-    per_run: dict = {}
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        run = row[run_col]
-        base = per_run.setdefault(run, {"next": offsets.get(run, 0), "by_pid": {}})
-        base["by_pid"][row["_pid"]] = base["next"]
-        base["next"] += row["count"]
-    run_counts = {run: info["next"] - offsets.get(run, 0) for run, info in per_run.items()}
-    if not per_run:
-        return ranged.withColumn(out_col, F.lit(0).cast("long")).drop("_pid"), run_counts
-    # dense per-run offset arrays indexed by _pid, one SQL literal (see
-    # sql_long_array_map for the py4j rationale)
-    max_pid = max(pid for info in per_run.values() for pid in info["by_pid"])
-    arrays = {}
-    for run, info in per_run.items():
-        arr, cur = [], offsets.get(run, 0)
-        for pid in range(max_pid + 1):
-            cur = info["by_pid"].get(pid, cur)
-            arr.append(cur)
-        arrays[run] = arr
-    offset_map = sql_long_array_map(arrays)
-    w = Window.partitionBy("_pid", run_col).orderBy(*[F.col(c) for c in order_cols])
-    out = ranged.withColumn(
-        out_col,
-        (
-            F.element_at(offset_map, F.col(run_col))[F.col("_pid")]
-            + F.row_number().over(w)
-            - 1
-        ).cast("long"),
-    ).drop("_pid")
-    return out, run_counts
-
-
 def advance_offsets(offsets: dict, run_counts: dict) -> dict:
-    """Advance per-run offsets by the counts returned from assign_order_index."""
+    """Advance per-run offsets by one flag's per-run counts returned from
+    :func:`assign_flagged_indexes_bucketed`."""
     out = dict(offsets)
     for run, cnt in run_counts.items():
         out[run] = out.get(run, 0) + cnt
@@ -128,18 +71,21 @@ def assign_flagged_indexes_bucketed(
     num_buckets: int,
     run_col: str = "run_id",
 ):
-    """One-shuffle variant of :func:`assign_flagged_indexes` for callers that
-    already know the value range of ``order_cols[0]`` per run (the engine
-    knows the frontier's rank span exactly — ranks are dense indexes it
-    assigned itself the previous iteration).
+    """One pass assigning several per-run dense indexes at once: for each
+    boolean column ``flag`` in ``flags``, rows where the flag holds get
+    ``idx_<flag>`` = offsets_by_flag[flag][run] + (0-based position among
+    flagged rows in canonical ``order_cols`` order). Null elsewhere.
 
-    ``repartitionByRange`` needs a *sampling pass* to find range boundaries —
-    it executes the whole upstream plan once for the sample and again for the
-    real shuffle. Here the range boundaries are computed arithmetically:
+    The caller must know the value range of ``order_cols[0]`` per run (the
+    engine knows the frontier's rank span exactly — ranks are dense indexes
+    it assigned itself the previous iteration). ``repartitionByRange`` would
+    need a *sampling pass* to find range boundaries — it executes the whole
+    upstream plan once for the sample and again for the real shuffle. Here
+    the range boundaries are computed arithmetically:
     ``bucket = floor((rank - lo) * B / (hi - lo))``, monotone in rank, so
     ascending bucket == ascending canonical order and the per-(run, bucket)
     counts cumulative-sum into global offsets exactly as range partitions
-    did. The plan becomes: one window shuffle on (run, bucket) computing the
+    would. The plan becomes: one window shuffle on (run, bucket) computing the
     in-bucket running sums, a lazy localCheckpoint, one light counts job, and
     a pure projection adding the offsets — no sampling, no user repartition
     (so AQE remains free to coalesce tiny waves).
@@ -149,7 +95,6 @@ def assign_flagged_indexes_bucketed(
     the exact row count of ``df``, free from the counts job (the engine uses
     it to advance its seen-size estimate without waiting on async metrics).
     """
-    spark = df.sparkSession
     if not spans:
         empty = {fl: {} for fl in flags}
         out = df
@@ -236,87 +181,3 @@ def assign_flagged_indexes_bucketed(
         ).drop(f"_rs_{fl}")
     return out.drop("_bkt"), run_counts, total_rows
 
-
-def assign_flagged_indexes(
-    df: DataFrame,
-    order_cols: list,
-    flags: list,
-    offsets_by_flag: dict,
-    run_col: str = "run_id",
-    num_partitions: int | None = None,
-):
-    """One range-sort pass assigning several per-run dense indexes at once:
-    for each boolean column ``flag`` in ``flags``, rows where the flag holds
-    get ``idx_<flag>`` = offsets_by_flag[flag][run] + (0-based position among
-    flagged rows in canonical order). Null elsewhere.
-
-    This replaces one full sort+counts pass per index (emit seq, frontier
-    rank) with a single pass: range-partition + in-partition sort, one counts
-    job, running-sum windows for the in-partition positions.
-
-    ``num_partitions``: explicit range-partition count — the caller sizes it
-    from the (driver-known) expected wave size, because AQE does not coalesce
-    user-specified repartitions and tiny waves otherwise pay full
-    shuffle-partition task overhead.
-
-    Returns (indexed_df, {flag: {run: count}}).
-    """
-    spark = df.sparkSession
-    n = num_partitions or max(2, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
-    n = max(1, n)
-    keys = [run_col] + list(order_cols)
-    ranged = (
-        df.repartitionByRange(n, *[F.col(c) for c in keys])
-        .sortWithinPartitions(*keys)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    ranged = ranged.localCheckpoint(eager=False)
-    aggs = [
-        F.sum(F.when(F.col(fl), 1).otherwise(0)).alias(f"_n_{fl}") for fl in flags
-    ]
-    counts = ranged.groupBy("_pid", run_col).agg(*aggs).collect()
-    counts = sorted(counts, key=lambda r: r["_pid"])
-    run_counts = {fl: {} for fl in flags}
-    offset_arrays = {fl: {} for fl in flags}
-    nxt = {fl: {} for fl in flags}
-    by_run: dict = {}
-    for row in counts:
-        by_run.setdefault(row[run_col], []).append(row)
-    max_pid = max((r["_pid"] for r in counts), default=-1)
-    for run, rows in by_run.items():
-        pos = {r["_pid"]: r for r in rows}
-        for fl in flags:
-            base = offsets_by_flag[fl].get(run, 0)
-            arr = []
-            for pid in range(max_pid + 1):
-                arr.append(base)
-                if pid in pos:
-                    base += pos[pid][f"_n_{fl}"]
-            offset_arrays[fl][run] = arr
-            nxt[fl][run] = base
-    for fl in flags:
-        run_counts[fl] = {
-            run: nxt[fl][run] - offsets_by_flag[fl].get(run, 0) for run in nxt[fl]
-        }
-    w = (
-        Window.partitionBy("_pid", run_col)
-        .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = ranged
-    for fl in flags:
-        if not offset_arrays[fl]:
-            out = out.withColumn(f"idx_{fl}", F.lit(None).cast("long"))
-            continue
-        omap = sql_long_array_map(offset_arrays[fl])
-        running = F.sum(F.when(F.col(fl), 1).otherwise(0)).over(w)
-        out = out.withColumn(
-            f"idx_{fl}",
-            F.when(
-                F.col(fl),
-                (F.element_at(omap, F.col(run_col))[F.col("_pid")] + running - 1).cast(
-                    "long"
-                ),
-            ),
-        )
-    return out.drop("_pid"), run_counts

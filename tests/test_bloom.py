@@ -151,19 +151,32 @@ def test_bloom_on_off_identical(spark):
     )
     new_total = on.seen("run0").count()
     assert fps <= max(2, new_total // 20)
-    # with no env set, every Spark iteration records its phase times, and the
-    # seen rows the bucket-pruned join scanned wherever it ran (maybe > 0)
-    m: dict = {}
-    for r in on.metrics().filter("iter > 0").collect():
-        m.setdefault(r["iter"], {})[r["metric"]] = r["value"]
+    # with no env set, every Spark iteration records its phase times, its
+    # seen path, and the seen rows the bucket-pruned join scanned wherever it
+    # ran (maybe > 0)
+    def by_iter(report):
+        m, paths = {}, {}
+        for r in report.metrics().filter("iter > 0").collect():
+            m.setdefault(r["iter"], {})[r["metric"]] = r["value"]
+            if r["metric"] == "seen_path":
+                paths.setdefault(r["iter"], []).append(r["key"])
+        # exactly one seen_path row per iteration
+        assert sorted(paths) == list(range(1, report.iterations + 1)), paths
+        assert all(len(p) == 1 for p in paths.values()), paths
+        return m, {it: p[0] for it, p in paths.items()}
+
+    m, paths = by_iter(on)
     assert m
     for it, row in m.items():
         assert row["index_ms"] >= 0 and row["drain_ms"] >= 0, it
         if row["bloom_maybe"] > 0:
             assert row["seen_rows_scanned"] > 0, it
+            assert paths[it].startswith("bloom_"), (it, paths[it])
         else:
             assert row["seen_rows_scanned"] == -1, it
     assert any(row["bloom_maybe"] > 0 for row in m.values())
+    _, off_paths = by_iter(off)
+    assert set(off_paths.values()) == {"broadcast"}, off_paths
     on.state.cleanup()
     off.state.cleanup()
 

@@ -188,23 +188,47 @@ def test_resume_mid_crawl(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "kw",
+    "kw, consts",
     [
-        dict(bloom_min_seen=0),  # bucket-pruned broadcast semi-join path
-        dict(bloom_min_seen=0, semi_broadcast_rows=0),  # pruned shuffle fallback
-        dict(bloom_min_seen=10**9, direct_broadcast_seen_rows=0),  # plain shuffle anti-join
-        dict(bloom_min_seen=10**9),  # broadcast-seen anti-join (small seen)
+        (dict(bloom_min_seen=0), {}),  # bucket-pruned broadcast semi-join path
+        # pruned shuffle fallback; also drains the carried delta first
+        (dict(bloom_min_seen=0), {"SEMI_BROADCAST_ROWS": 0}),
+        # bloom_min_seen never reached, but seen is past the broadcast limit
+        (dict(bloom_min_seen=10**9), {"BROADCAST_SEEN_ROWS": 0}),
+        (dict(bloom_min_seen=10**9), {}),  # broadcast-seen anti-join (small seen)
     ],
-    ids=["semi_join", "pruned_shuffle", "plain_shuffle", "broadcast_seen"],
+    ids=["semi_join", "pruned_shuffle", "broadcast_limit", "broadcast_seen"],
 )
-def test_seen_join_strategies_parity(spark, kw):
-    """Every seen anti-join strategy (engine.py step 4) must produce the
-    byte-identical emission order + seen set of the reference interpreter."""
+def test_seen_join_strategies_parity(spark, monkeypatch, kw, consts):
+    """Every seen-check path (engine.py step 4) must produce the
+    byte-identical emission order + seen set of the reference interpreter.
+    ``consts`` monkeypatches the engine's size limits to force a path."""
+    from crawley_spark import engine
+
+    for name, value in consts.items():
+        monkeypatch.setattr(engine, name, value)
     pages = synth_site()
     cfg = CrawlConfig(depth=-1, no_head=True)
-    want, got_results, got_seen = run_both(spark, pages, "http://h0.example", cfg, **kw)
-    assert got_results == want.results, kw
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    report = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        driver_wave_rows=0, **kw,
+    )
+    assert report.result_urls("run0") == want.results, kw
+    got_seen = {r["url_key"]: r["url"] for r in report.seen("run0").collect()}
     assert got_seen == want.seen, kw
+    paths = {
+        r["iter"]: r["key"]
+        for r in report.metrics().filter("metric = 'seen_path'").collect()
+    }
+    report.state.cleanup()
+    assert sorted(paths) == list(range(1, report.iterations + 1)), paths
+    if "BROADCAST_SEEN_ROWS" in consts:
+        # a seen table past the broadcast limit is never broadcast whole,
+        # whatever bloom_min_seen says
+        assert set(paths.values()) <= {"bloom_semi", "bloom_shuffle"}, paths
+    if "SEMI_BROADCAST_ROWS" in consts:
+        assert "bloom_shuffle" in paths.values(), paths
 
 
 def test_seen_partitioned_layout_and_compaction(spark, tmp_path):

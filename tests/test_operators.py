@@ -3368,9 +3368,10 @@ def test_script_profile(spark):
     """Fixture matrix over the SCRIPT_RANGES table: one doc per script
     (must classify as that script), a greek+latin exact tie (alphabetical
     tie-break → greek), digits/punct-only and empty and NULL docs ('und',
-    zero counts — NULL text ≡ empty doc), and a mixed han+kana doc where
-    kana mass wins. Counts cross-checked against a pure-Python code-point
-    mirror of the same ranges."""
+    zero counts — NULL text ≡ empty doc), a mixed han+kana doc where
+    kana mass wins, and latin letters around × and ÷ (signs, not letters).
+    Counts cross-checked against a pure-Python code-point mirror of the
+    same ranges."""
     from crawley_spark.operators.scriptid import SCRIPT_RANGES, script_profile
 
     fixtures = [
@@ -3387,11 +3388,15 @@ def test_script_profile(spark):
         (10, "שלום עולם", "hebrew"),
         (11, "สวัสดีชาวโลก", "thai"),
         (12, "这是中文文本测试", "han"),
+        (13, "a×b÷c", "latin"),  # × and ÷ are not letters
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t, _ in fixtures], "doc_id long, text string"
     )
     got = {r["doc_id"]: r.asDict() for r in script_profile(df).collect()}
+    # explicit count: brute() below reads the same table, so it cannot
+    # catch a range that admits the signs
+    assert got[13]["n_latin"] == 3, got[13]
 
     def brute(txt, script):
         return sum(
@@ -4257,14 +4262,15 @@ def test_duplication_by_source(spark):
 
 def test_lang_id_confidence(spark):
     """Margin semantics: unambiguous German text is confident; an exact
-    en/fr one-marker tie has margin 0 and is NOT confident (the doc the
-    alphabetical tie-break decides arbitrarily); empty/markerless text is
-    'und' with zero scores; pred_lang always agrees with lang_id."""
+    en/fr/es one-marker tie (' the ', ' le ', ' y ') has margin 0 and is NOT
+    confident (the doc the alphabetical tie-break decides arbitrarily);
+    empty/markerless text is 'und' with zero scores; pred_lang always
+    agrees with lang_id."""
     from crawley_spark.operators.textstats import lang_id, lang_id_confidence
 
     rows = [
         (0, "das ist der text und die sache nicht wahr der und"),
-        (1, "x the y le z"),          # 1-1 en/fr tie
+        (1, "x the y le z"),          # 1-1-1 en/fr/es tie
         (2, ""),                       # und
         (3, "zzz qqq www"),           # no markers -> und
         (4, "the the the and of le"),  # en 5? vs fr 1 -> confident

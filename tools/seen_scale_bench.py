@@ -3,10 +3,12 @@
 Runs a synthetic-corpus crawl and prints a per-iteration table from its
 metrics:
 
-    iter  frontier  maybe  buckets  seen_scanned  seen_total  wall_ms
+    iter  path  frontier  maybe  buckets  seen_scanned  seen_total  wall_ms
 
-``seen_scanned`` is the exact parquet-footer row count of the seen-side
-dirs the anti-join read that iteration (bucket-pruned, compacted);
+``path`` is the iteration's ``seen_path`` metric (broadcast, bloom_semi or
+bloom_shuffle; "-" on the bootstrap row); ``seen_scanned`` is the exact
+parquet-footer row count of the seen-side dirs the anti-join read that
+iteration (bucket-pruned, compacted);
 ``seen_total`` is the cumulative seen-table size. The r01 design re-scanned
 and re-shuffled seen_total every iteration; the fix's seen side is scanned
 only for the touched buckets and never shuffled (broadcast semi-join).
@@ -74,22 +76,24 @@ def main():
         m.setdefault(r["iter"], {})[r["metric"]] = (r["key"], r["value"])
     # seen_total comes from the committed delta dirs' parquet footers
     cum = 0
-    print(f"{'iter':>4} {'frontier':>9} {'maybe':>8} {'bks':>4} {'scanned':>10} {'seen_total':>10} {'wall_ms':>8}")
+    print(f"{'iter':>4} {'path':>13} {'frontier':>9} {'maybe':>8} {'bks':>4} {'scanned':>10} {'seen_total':>10} {'wall_ms':>8}")
     out = []
     for it in sorted(m):
         row = m[it]
         delta = report.state.count_parquet_rows(
             report.state._leaf_dirs(report.state._dir("seen", it))
         )
+        path = row.get("seen_path", ("-", 0))[0]
         frontier = row.get("frontier_in", ("", 0))[1]
         maybe = row.get("bloom_maybe", ("", -1))[1]
         bks = row.get("seen_buckets_read", ("", -1))[1]
         scanned = row.get("seen_rows_scanned", ("", -1))[1]
         wall = row.get("wall_ms", ("", 0))[1]
-        print(f"{it:>4} {frontier:>9} {maybe:>8} {bks:>4} {scanned:>10} {cum:>10} {wall:>8}")
+        print(f"{it:>4} {path:>13} {frontier:>9} {maybe:>8} {bks:>4} {scanned:>10} {cum:>10} {wall:>8}")
         out.append(
             {
                 "iter": it,
+                "path": path,
                 "frontier": frontier,
                 "maybe": maybe,
                 "buckets_read": bks,
