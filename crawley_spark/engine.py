@@ -36,7 +36,7 @@ from .operators import bloom as bloomf
 from .operators.local_wave import process_wave
 from .operators.politeness import schedule, schedule_rows
 from .operators.seen import anti_join_seen, first_occurrence
-from .plans.ordering import advance_offsets, assign_flagged_indexes_bucketed
+from .plans.ordering import advance_offsets, assign_flagged_indexes_bucketed, sql_str
 from .sources.pages import normalize_pages
 from .sources.state import (
     BLOOM_STATE_SCHEMA,
@@ -211,10 +211,15 @@ def crawl(
     ``seen_rows_scanned`` — parquet-footer rows of the seen shards the
     bucket-pruned join scanned, -1 on waves where it did not run) plus the
     phase times ``index_ms`` (plan + index pass) and ``drain_ms`` (joining
-    the previous iteration's writes and committing its manifest).
+    the previous iteration's writes and committing its manifest). Driver
+    waves record ``fetch_ms`` (the page-fetch collect) and ``extract_ms``
+    (``process_wave``). Every iteration records ``wall_ms``.
 
     compact_every: seen deltas are merged into one bucket-partitioned
     snapshot every this many iterations, bounding the per-read dir count.
+    The wave that ends the crawl (empty next frontier) does not compact:
+    nothing reads that snapshot. A crawl stopped by ``max_iterations``
+    still compacts on schedule, since it may be resumed.
 
     frontier_cap: opt-in deterministic analogue of the reference's bounded
     queues (Q3, crawler.go:29-33/184-193: producers drop silently when the
@@ -234,7 +239,7 @@ def crawl(
     tiny waves (the seed head, the convergence tail) where the per-iteration
     Spark scheduling floor (~1 s at local[32]) dwarfs the work; a wave of
     ≤ ``driver_wave_rows`` frontier rows runs on the driver instead — one
-    pushed-down ``url IN (...)`` corpus scan, then the exact same
+    pushed-down ``url IN (...)`` scan (one SQL expression), then the exact same
     extract/dedup/order dataflow in plain Python over a driver-resident
     seen set. Engages only while that set is exact and ≤ ``driver_seen_cap``
     keys: fresh crawls start with it (bootstrap is driver-side already),
@@ -265,20 +270,32 @@ def crawl(
         seq_offsets = dict(state.manifest["seq_offsets"])
         if state.manifest["done"]:
             return CrawlReport(state, runs, state.manifest["iteration"])
-        frontier_rows_known = None  # unknown → count once below
         boot_frontier, boot_seen = None, None
-    else:
-        rank_offsets, seq_offsets, boot_frontier, boot_seen = _bootstrap(
-            spark, state, pages_n, runs
+        # robots rules are static after init; recompute from the corpus
+        # (cheap, deterministic) rather than serializing them into the manifest
+        robots_rules = {r: v[0] for r, v in _collect_robots(spark, pages_n, runs).items()}
+        # the resumed state is on disk only: read back the Bloom shards and
+        # count seen and the frontier (a fresh crawl holds all three)
+        last = start_iter - 1
+        bloom_merged = bloomf.merge_bitmaps(
+            [
+                (r["bucket"], bytes(r["bitmap"]))
+                for r in state._read_upto("blooms", BLOOM_STATE_SCHEMA, last).collect()
+            ]
         )
-        frontier_rows_known = len(boot_frontier)
+        seen_total = state.seen(upto=last).count()
+        frontier_rows = state.frontier(last).count()
+    else:
+        (
+            rank_offsets, seq_offsets, boot_frontier, boot_seen, boot_shards, robots_rules,
+        ) = _bootstrap(spark, state, pages_n, runs)
         start_iter = 1
+        bloom_merged = bloomf.merge_bitmaps(boot_shards)
+        seen_total = len(boot_seen)
+        frontier_rows = len(boot_frontier)
 
     cfgs = {r: cfg for r, (seed, cfg) in runs.items()}
     seeds_map = {r: seed for r, (seed, cfg) in runs.items()}
-    # robots rules are static after init; recompute from the corpus (cheap,
-    # deterministic) rather than serializing them into the manifest
-    robots_rules = {r: v[0] for r, v in _collect_robots(spark, pages_n, runs).items()}
     extract_fn = build_extract_candidates(cfgs, seeds_map, robots_rules)
 
     # low edge of the current frontier's rank span per run (exact after
@@ -288,11 +305,6 @@ def crawl(
     rank_lo = {run: 0 for run in runs}
     carry_frontier = None
     iteration = start_iter - 1
-    frontier_rows = (
-        frontier_rows_known
-        if frontier_rows_known is not None
-        else state.frontier(iteration).count()
-    )
 
     # adaptive partition sizing: AQE cannot coalesce user repartitions or
     # post-checkpoint writes, so the driver sizes them from the wave counts
@@ -321,14 +333,7 @@ def crawl(
     # deltas (retained on disk regardless of compaction) into the shards, and
     # from then on each iteration appends its wave's shard delta before the
     # manifest commit — so the invariant also survives resume at any point.
-    bloom_merged = bloomf.merge_bitmaps(
-        [
-            (r["bucket"], bytes(r["bitmap"]))
-            for r in state._read_upto("blooms", BLOOM_STATE_SCHEMA, iteration).collect()
-        ]
-    )
     bloom_bc = None
-    seen_total = state.seen(upto=iteration).count()
     bloom_upto = state.manifest.get("bloom_upto", iteration if resume else 0)
 
     # Pipelined finalize (per-iteration floor): the previous iteration's
@@ -364,9 +369,9 @@ def crawl(
     driver_seen_futs: list = []
     driver_frontier_fut = None
 
-    def _drain_pending() -> int:
+    def _drain_pending() -> None:
         """Join the pending iteration's futures, write its metrics, commit
-        its manifest. Returns its deferred count (always 0 when pipelined)."""
+        its manifest."""
         nonlocal pending, bloom_merged, bloom_bc, bloom_upto, avg_links, carry_seen_delta
         if pending is None:
             return 0
@@ -375,7 +380,6 @@ def crawl(
         for f in p["write_futs"]:
             f.result()
         lineage_rows = p["lineage_fut"].result()
-        deferred_n = p["deferred_fut"].result() if p["deferred_fut"] is not None else 0
         new_compact = p["compact_fut"].result() if p["compact_fut"] is not None else None
         if p["bloom_fut"] is not None:
             new_shards = [
@@ -400,7 +404,7 @@ def crawl(
             + p["metric_rows"]
             + [
                 (p["iteration"], "candidates", "", cand_n),
-                (p["iteration"], "deferred", "", deferred_n),
+                (p["iteration"], "deferred", "", p["deferred_n"]),
             ]
         )
         state.write_local("metrics", p["iteration"], metric_rows, METRICS_SCHEMA)
@@ -416,7 +420,6 @@ def crawl(
             bloom_upto=bloom_upto,
         )
         p["candidates"].unpersist()
-        return deferred_n
 
     try:
         while frontier_rows > 0 and iteration < max_iterations:
@@ -440,11 +443,16 @@ def crawl(
                 driver_seen_futs = []
                 urls = sorted({r[2] for r in now_rows if r[4]})
                 by_url: dict = {}
+                t_fetch0 = time.monotonic()
                 if urls:
-                    for r in pages_n.filter(F.col("url").isin(urls)).collect():
+                    # one parsed SQL expression: isin() costs a py4j call per
+                    # literal (~0.6 ms per URL), F.expr one call per wave
+                    in_list = ", ".join(map(sql_str, urls))
+                    for r in pages_n.filter(F.expr(f"url IN ({in_list})")).collect():
                         by_url.setdefault(r["url"], []).append(
                             (r["html"], r["content_type"])
                         )
+                t_extract0 = time.monotonic()
                 page_rows = [
                     (r[0], r[1], r[2], html, ct)
                     for r in now_rows
@@ -455,6 +463,7 @@ def crawl(
                     page_rows, driver_seen, iteration, seq_offsets,
                     rank_offsets, cfgs, seeds_map, robots_rules, SEEN_BUCKETS,
                 )
+                t_extract1 = time.monotonic()
                 seq_offsets, rank_offsets = out["seq_offsets"], out["rank_offsets"]
                 driver_seen_n = len(driver_seen)
                 if driver_seen_n > driver_seen_cap:
@@ -484,6 +493,8 @@ def crawl(
                         (iteration, "dropped_overflow", "", 0),
                         (iteration, "driver_path", "", 1),
                         (iteration, "seen_path", "driver", 1),
+                        (iteration, "fetch_ms", "", int((t_extract0 - t_fetch0) * 1000)),
+                        (iteration, "extract_ms", "", int((t_extract1 - t_extract0) * 1000)),
                         (iteration, "wall_ms", "", int((time.monotonic() - t0) * 1000)),
                     ],
                     METRICS_SCHEMA,
@@ -718,34 +729,39 @@ def crawl(
             # checkpoint blocks. Every compact_every iterations the seen deltas
             # merge into one bucket-partitioned snapshot (covers ≤ iteration-1:
             # durable after the drain above) — amortized O(seen/K) per
-            # iteration, and the read path stays O(K) dirs.
+            # iteration, and the read path stays O(K) dirs. The wave that ends
+            # the crawl (empty next frontier) skips it: nothing reads that
+            # snapshot, and CrawlReport.seen() reads the same rows from the
+            # last snapshot plus the deltas after it. A crawl cut by
+            # max_iterations still compacts — it may be resumed.
             t_drain0 = time.monotonic()
             _drain_pending()
             t_drain = time.monotonic() - t_drain0
-            last_compact = state.manifest.get("seen_compact", -1)
-            do_compact = iteration - 1 - max(last_compact, 0) >= compact_every
             write_futs = [
                 pool.submit(state.write, "results", iteration, results_df),
                 pool.submit(state.write, "frontier", iteration, next_frontier),
                 pool.submit(state.write_seen, iteration, seen_df),
             ]
-            compact_fut = (
-                pool.submit(state.compact_seen, iteration - 1) if do_compact else None
-            )
             lineage_fut = pool.submit(
                 lambda: candidates.groupBy("src_pid")
                 .agg(F.sum("dup_count").alias("count"), F.count("*").alias("rows"))
                 .collect()
             )
-            deferred_fut = (
-                None
-                if all(q is None for q in quotas.values())
-                else pool.submit(deferred.count)
-            )
             bloom_fut = (
                 pool.submit(lambda: bloomf.build_shards(indexed).collect())
                 if bloom_active
                 else None
+            )
+            # quotas (sync mode only): count the deferred rows now so both the
+            # compaction rule and the committed done flag are exact
+            deferred_n = 0 if all(q is None for q in quotas.values()) else deferred.count()
+            last_compact = state.manifest.get("seen_compact", -1)
+            do_compact = (
+                enq_n + deferred_n > 0
+                and iteration - 1 - max(last_compact, 0) >= compact_every
+            )
+            compact_fut = (
+                pool.submit(state.compact_seen, iteration - 1) if do_compact else None
             )
             seen_total += wave_rows
             enq_total = sum(enq_counts.values())
@@ -773,23 +789,17 @@ def crawl(
                 "write_futs": write_futs,
                 "compact_fut": compact_fut,
                 "lineage_fut": lineage_fut,
-                "deferred_fut": deferred_fut,
+                "deferred_n": deferred_n,
                 "bloom_fut": bloom_fut,
                 "metric_rows": metric_rows,
                 "frontier_rows": frontier_rows,
                 "rank_offsets": dict(rank_offsets),
                 "seq_offsets": dict(seq_offsets),
                 "candidates": candidates,
-                "done": False,  # patched below once the next frontier size is known
+                "done": enq_n + deferred_n == 0,
             }
-            if pipelined:
-                deferred_n = 0
-            else:
-                # sync mode: resolve the deferred count first so the committed
-                # done flag is exact, then drain (commits this iteration)
-                deferred_n = deferred_fut.result() if deferred_fut is not None else 0
-                pending["done"] = (enq_n + deferred_n) == 0
-                _drain_pending()
+            if not pipelined:
+                _drain_pending()  # sync mode: commit this iteration now
             # next frontier's rank span: fresh enqueues start at the old high
             # water; carried-over deferred rows keep their old (lower) ranks.
             # The in-memory carry is only safe where localCheckpoint blocks are
@@ -806,7 +816,6 @@ def crawl(
             )
             frontier_rows = enq_n + deferred_n
             if pending is not None:
-                pending["done"] = frontier_rows == 0
                 carry_seen_delta = seen_df
                 carry_seen_rows = wave_rows
             if driver_seen is not None:
@@ -849,7 +858,7 @@ def crawl(
             p, pending = pending, None
             if p is not None:
                 futs = list(p["write_futs"]) + [
-                    p["compact_fut"], p["lineage_fut"], p["deferred_fut"], p["bloom_fut"]
+                    p["compact_fut"], p["lineage_fut"], p["bloom_fut"]
                 ]
                 for f in futs:
                     if f is not None:
@@ -865,7 +874,11 @@ def _bootstrap(spark, state: CrawlState, pages_n, runs):
     """Iteration 0, driver-side (tiny, O(#runs + robots rules)): pre-seed the
     seen set with the raw seed strings (crawler.go:97-98), fetch + parse
     robots, process the robots link/sitemap injections through the canonical
-    candidate pipeline (crawler.go:246-263), and lay down frontier₀."""
+    candidate pipeline (crawler.go:246-263), and lay down frontier₀.
+
+    Returns (rank_offsets, seq_offsets, frontier rows, {(run_id, url_key)}
+    seen set, Bloom shards, {run_id: robots rules}) — everything crawl()
+    would otherwise read back from the tables just written."""
     robots_by_run = _collect_robots(spark, pages_n, runs)
 
     results_rows, seen_rows, frontier_rows = [], [], []
@@ -908,9 +921,8 @@ def _bootstrap(spark, state: CrawlState, pages_n, runs):
         SEEN_SCHEMA,
     )
     state.write_local("frontier", 0, frontier_rows, FRONTIER_SCHEMA)
-    state.write_local_binary(
-        "blooms", 0, bloomf.build_shards_local([(r, k) for r, k, _ in seen_rows])
-    )
+    shards = bloomf.build_shards_local([(r, k) for r, k, _ in seen_rows])
+    state.write_local_binary("blooms", 0, shards)
     state.write_local(
         "metrics", 0, [(0, "bootstrap_frontier", "", len(frontier_rows))], METRICS_SCHEMA
     )
@@ -920,4 +932,6 @@ def _bootstrap(spark, state: CrawlState, pages_n, runs):
         seq_offsets,
         frontier_rows,
         {(run_id, key) for run_id, key, _ in seen_rows},
+        shards,
+        {run_id: rules for run_id, (rules, _) in robots_by_run.items()},
     )

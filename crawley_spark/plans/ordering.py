@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _sql_str(s: str) -> str:
+def sql_str(s: str) -> str:
     """SQL string literal (single-quoted, backslash + quote escaped)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
@@ -39,7 +39,7 @@ def sql_long_map(d: dict) -> "F.Column":
     measured ~0.5 s/iteration of the crawl's serial floor. One ``F.expr``
     string costs one round-trip and parses JVM-side in microseconds.
     """
-    items = ", ".join(f"{_sql_str(k)}, {int(v)}L" for k, v in d.items())
+    items = ", ".join(f"{sql_str(k)}, {int(v)}L" for k, v in d.items())
     return F.expr(f"map({items})") if items else F.expr("map()")
 
 
@@ -47,7 +47,7 @@ def sql_long_array_map(d: dict) -> "F.Column":
     """{str: [int, ...]} → map<string,array<bigint>> as one SQL expression
     (see :func:`sql_long_map` for why)."""
     items = ", ".join(
-        f"{_sql_str(k)}, array({','.join(f'{int(v)}L' for v in arr)})"
+        f"{sql_str(k)}, array({','.join(f'{int(v)}L' for v in arr)})"
         for k, arr in d.items()
     )
     return F.expr(f"map({items})")

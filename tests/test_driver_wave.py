@@ -18,7 +18,7 @@ from crawley_spark.engine import crawl as spark_crawl
 
 from .conftest import pages_to_df
 from .scenarios import SCENARIOS
-from .test_engine_parity import synth_site
+from .test_engine_parity import _deferred, synth_site
 
 
 def _driver_iters(report):
@@ -29,11 +29,24 @@ def _driver_iters(report):
     }
 
 
+def _assert_driver_phase_rows(report, driver_iters):
+    """Every driver wave records its fetch and extract phase times."""
+    phases = {
+        (r["iter"], r["metric"]): r["value"]
+        for r in report.metrics().collect()
+        if r["metric"] in ("fetch_ms", "extract_ms")
+    }
+    for i in driver_iters:
+        for m in ("fetch_ms", "extract_ms"):
+            assert phases.get((i, m), -1) >= 0, f"iteration {i} has no {m} row"
+
+
 def _run(spark, pages, seed, cfg, **kw):
     report = spark_crawl(spark, pages_to_df(spark, pages), seed, cfg, **kw)
     results = report.result_urls("run0")
     seen = {r["url_key"]: r["url"] for r in report.seen("run0").collect()}
     driver_iters = _driver_iters(report)
+    _assert_driver_phase_rows(report, driver_iters)
     n_iters = report.iterations
     report.state.cleanup()
     return results, seen, driver_iters, n_iters
@@ -60,6 +73,42 @@ def test_synth_all_driver_parity(spark):
     # the whole site is tiny: every iteration should have taken the fast path
     assert driver_iters, "hybrid never engaged on a tiny site"
     assert len(driver_iters) == n_iters
+
+
+def test_fetch_filter_quotes_urls(spark):
+    """The driver wave's ``url IN (...)`` fetch filter is one SQL string, so
+    page URLs holding a quote, a backslash, a percent escape or non-ASCII
+    text must still match their corpus rows exactly: each such page links
+    to a leaf only its own fetch can discover."""
+    seed = "http://w.example"
+    odd = [
+        "/it's",
+        "/a%20b",
+        "/q?b=\\x",
+        "/q?d=\\'e",
+        "/q?e=\\\\n",
+        "/q?c=café",
+        "/r?g=日本&h=' OR '1'='1",
+    ]
+    pages = {seed: interp.Page(
+        body="".join(f'<a href="{h}">o</a>' for h in odd), content_type="text/html"
+    )}
+    for i, h in enumerate(odd):
+        pages[seed + h] = interp.Page(
+            body=f'<a href="/leaf{i}">l</a>', content_type="text/html"
+        )
+        pages[f"{seed}/leaf{i}"] = interp.Page(body="<html></html>", content_type="text/html")
+    cfg = CrawlConfig(depth=-1, no_head=True)
+    want = interp.crawl(pages, seed, cfg)
+    # the corpus keys are the resolved URLs: every odd page and its leaf
+    # is reached, so a fetch that misses a row changes the results
+    assert set(want.results) == set(pages) - {seed}
+    for kw in ({}, {"driver_wave_rows": 0}):
+        results, seen, driver_iters, n_iters = _run(spark, pages, seed, cfg, **kw)
+        assert results == want.results, kw
+        assert seen == want.seen, kw
+        if not kw:
+            assert len(driver_iters) == n_iters, "expected all-driver waves"
 
 
 def test_mixed_transitions_parity(spark):
@@ -150,13 +199,6 @@ def test_multi_run_hybrid(spark):
         got_seen = {r["url_key"]: r["url"] for r in report.seen(run_id).collect()}
         assert got_seen == want.seen, run_id
     report.state.cleanup()
-
-
-def _deferred(report):
-    return {
-        r["iter"]: r["value"]
-        for r in report.metrics().filter("metric = 'deferred'").collect()
-    }
 
 
 @pytest.mark.parametrize("driver_wave_rows", [256, 2], ids=["all_driver", "spark_handback"])

@@ -28,6 +28,13 @@ def run_both(spark, pages, seed, cfg, **kw):
     return want, got_results, got_seen
 
 
+def _deferred(report):
+    return {
+        r["iter"]: r["value"]
+        for r in report.metrics().filter("metric = 'deferred'").collect()
+    }
+
+
 @pytest.mark.parametrize("name", sorted(SCENARIOS))
 def test_scenario_parity(spark, name):
     pages, seed, cfg = SCENARIOS[name]
@@ -328,6 +335,138 @@ def test_resume_after_compaction(spark, tmp_path):
     assert resumed.result_urls("run0") == want.results
     got_seen = {r["url_key"]: r["url"] for r in resumed.seen("run0").collect()}
     assert got_seen == want.seen
+
+
+def test_robots_parsed_once_per_crawl(spark, tmp_path, monkeypatch):
+    """A fresh crawl reuses the robots rules its bootstrap parsed, and a
+    resume parses them once: one filtered corpus collect either way."""
+    import crawley_spark.engine as eng
+
+    calls = []
+    real = eng._collect_robots
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(eng, "_collect_robots", spy)
+    seed = "http://h0.example"
+    pages = synth_site()
+    pages[f"{seed}/robots.txt"] = Page(
+        body="User-agent: *\nDisallow: /p3\n", content_type="text/plain"
+    )
+    cfg = CrawlConfig(depth=-1, no_head=True, robots_policy="respect")
+    want = interp.crawl(pages, seed, cfg)
+    ck = str(tmp_path / "ck")
+    spark_crawl(
+        spark, pages_to_df(spark, pages), seed, cfg, checkpoint_dir=ck, max_iterations=2
+    )
+    assert len(calls) == 1, "fresh crawl parsed robots more than once"
+    calls.clear()
+    resumed = spark_crawl(
+        spark, pages_to_df(spark, pages), seed, cfg, checkpoint_dir=ck, resume=True
+    )
+    assert len(calls) == 1, "resume must parse robots exactly once"
+    assert resumed.result_urls("run0") == want.results
+    got_seen = {r["url_key"]: r["url"] for r in resumed.seen("run0").collect()}
+    assert got_seen == want.seen
+
+
+def test_fresh_crawl_skips_startup_reads(spark, tmp_path, monkeypatch):
+    """A fresh crawl starts from the Bloom shards and seen rows its
+    bootstrap holds in memory: no blooms or seen read before the first
+    iteration. A resume does not hold them, so it reads both back."""
+    import crawley_spark.engine as eng
+    from crawley_spark.sources.state import CrawlState
+
+    events = []
+
+    def spy(owner, name, tag):
+        real = getattr(owner, name)
+
+        def wrapped(*a, **kw):
+            tag_ = tag(*a, **kw) if callable(tag) else tag
+            if tag_:
+                events.append(tag_)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(owner, name, wrapped)
+
+    spy(CrawlState, "_read_upto", lambda self, table, *a, **kw: table == "blooms" and "blooms")
+    spy(CrawlState, "seen", "seen")
+    spy(eng, "schedule", "iteration")
+    spy(eng, "schedule_rows", "iteration")
+
+    def startup_reads():
+        return set(events[: events.index("iteration")]) if "iteration" in events else set(events)
+
+    pages = synth_site()
+    cfg = CrawlConfig(depth=-1, no_head=True)
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    ck = str(tmp_path / "ck")
+    spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        checkpoint_dir=ck, max_iterations=2,
+    )
+    assert startup_reads() == set(), events
+    events.clear()
+    resumed = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        checkpoint_dir=ck, resume=True,
+    )
+    assert startup_reads() == {"blooms", "seen"}, events
+    assert resumed.result_urls("run0") == want.results
+    got_seen = {r["url_key"]: r["url"] for r in resumed.seen("run0").collect()}
+    assert got_seen == want.seen
+
+
+@pytest.mark.parametrize("polite", [False, True], ids=["pipelined", "sync"])
+def test_crawl_ending_wave_skips_compaction(spark, tmp_path, monkeypatch, polite):
+    """With compact_every=1 every Spark wave from the second on compacts,
+    except the one whose next frontier is empty: nothing reads that
+    snapshot. A crawl cut by max_iterations still compacts on its last
+    iteration, since it may be resumed. Quotas put the loop in sync mode,
+    where the deferred rows count toward the next frontier."""
+    from crawley_spark.sources.state import CrawlState
+
+    compacted = []
+    real = CrawlState.compact_seen
+
+    def spy(self, upto):
+        compacted.append(upto + 1)  # the iteration that submitted it
+        return real(self, upto)
+
+    monkeypatch.setattr(CrawlState, "compact_seen", spy)
+    pages = synth_site()
+    cfg = CrawlConfig(depth=-1, no_head=True, delay_ms=100 if polite else 0)
+    kw = {"compact_every": 1, "driver_wave_rows": 0}
+    if polite:
+        kw["politeness_budget_ms"] = 300
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    full = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        checkpoint_dir=str(tmp_path / "full"), **kw,
+    )
+    n = full.iterations
+    assert n >= 4, "site too small to exercise compaction"
+    assert compacted == list(range(2, n)), (n, compacted)
+    assert full.state.manifest["seen_compact"] == n - 2
+    if polite:
+        assert sum(_deferred(full).values()) > 0, "no deferral exercised"
+        assert set(full.result_urls("run0")) == set(want.results)
+    else:
+        assert full.result_urls("run0") == want.results
+    got_seen = {r["url_key"]: r["url"] for r in full.seen("run0").collect()}
+    assert got_seen == want.seen
+
+    compacted.clear()
+    cut = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        checkpoint_dir=str(tmp_path / "cut"), max_iterations=n - 1, **kw,
+    )
+    assert cut.iterations == n - 1
+    assert compacted and compacted[-1] == n - 1, (n, compacted)
+    assert cut.state.manifest["seen_compact"] == n - 2
 
 
 def test_exception_mid_crawl_releases_pool_and_cache(spark, monkeypatch):
