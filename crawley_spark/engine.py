@@ -336,18 +336,17 @@ def crawl(
     bloom_bc = None
     bloom_upto = state.manifest.get("bloom_upto", iteration if resume else 0)
 
-    # Pipelined finalize (per-iteration floor): the previous iteration's
-    # table writes / lineage collect / compaction / bloom-shard job stay in
-    # flight while this iteration's (driver-bound) plan+index pass runs;
-    # they are drained — and the manifest committed — one iteration later.
-    # Correctness never depends on those writes: the next iteration's seen
-    # check unions the in-memory (checkpoint-backed) delta of the pending
-    # iteration over the durable parquet state, and a crash simply replays
-    # the uncommitted iteration from the last manifest (writes are
-    # idempotent overwrites). Pipelining engages only where the in-memory
-    # carry is safe at all (static local mode, no quotas — same condition
-    # as carry_frontier); clusters keep the strict write→commit→read cycle.
-    pipelined = can_carry and all(q is None for q in quotas.values())
+    # One commit protocol for Spark waves: a wave's table writes / lineage
+    # collect / compaction / bloom-shard job stay in flight ("pending") and
+    # are drained — and its manifest committed — by the next wave. A wave
+    # that runs on the carried in-memory frontier drains after its own
+    # (driver-bound) plan+index pass, so the manifest commits one iteration
+    # behind; a wave that reads the committed frontier snapshot drains
+    # first (write → commit → read). Correctness never depends on the
+    # in-flight writes: the seen check unions the pending wave's in-memory
+    # (checkpoint-backed) delta over the durable parquet state, and a crash
+    # replays the uncommitted iteration from the last manifest (writes are
+    # idempotent overwrites).
     pending: dict | None = None
     carry_seen_delta = None
     carry_seen_rows = 0
@@ -371,55 +370,61 @@ def crawl(
 
     def _drain_pending() -> None:
         """Join the pending iteration's futures, write its metrics, commit
-        its manifest."""
+        its manifest. Whether it commits or raises, the iteration's wave is
+        released: unjoined futures are cancelled, its candidates unpersisted."""
         nonlocal pending, bloom_merged, bloom_bc, bloom_upto, avg_links, carry_seen_delta
         if pending is None:
-            return 0
+            return
         p, pending = pending, None
         carry_seen_delta = None
-        for f in p["write_futs"]:
-            f.result()
-        lineage_rows = p["lineage_fut"].result()
-        new_compact = p["compact_fut"].result() if p["compact_fut"] is not None else None
-        if p["bloom_fut"] is not None:
-            new_shards = [
-                (r["bucket"], bytes(r["bitmap"])) for r in p["bloom_fut"].result()
+        try:
+            for f in p["write_futs"]:
+                f.result()
+            lineage_rows = p["lineage_fut"].result()
+            new_compact = p["compact_fut"].result() if p["compact_fut"] is not None else None
+            if p["bloom_fut"] is not None:
+                new_shards = [
+                    (r["bucket"], bytes(r["bitmap"])) for r in p["bloom_fut"].result()
+                ]
+                state.write_local_binary("blooms", p["iteration"], new_shards)
+                bloom_merged = bloomf.merge_bitmaps(
+                    [(b, bm.tobytes()) for b, bm in bloom_merged.items()] + new_shards
+                )
+                bloom_upto = p["iteration"]
+                if bloom_bc is not None:
+                    bloom_bc.destroy()
+                    bloom_bc = None
+            lineage = [
+                (p["iteration"], "lineage_partition_candidates", str(r["src_pid"]), r["count"])
+                for r in lineage_rows
             ]
-            state.write_local_binary("blooms", p["iteration"], new_shards)
-            bloom_merged = bloomf.merge_bitmaps(
-                [(b, bm.tobytes()) for b, bm in bloom_merged.items()] + new_shards
+            cand_n = sum(c for _, _, _, c in lineage)
+            cand_rows = sum(r["rows"] for r in lineage_rows)
+            metric_rows = (
+                lineage
+                + p["metric_rows"]
+                + [
+                    (p["iteration"], "candidates", "", cand_n),
+                    (p["iteration"], "deferred", "", p["deferred_n"]),
+                ]
             )
-            bloom_upto = p["iteration"]
-            if bloom_bc is not None:
-                bloom_bc.destroy()
-                bloom_bc = None
-        lineage = [
-            (p["iteration"], "lineage_partition_candidates", str(r["src_pid"]), r["count"])
-            for r in lineage_rows
-        ]
-        cand_n = sum(c for _, _, _, c in lineage)
-        cand_rows = sum(r["rows"] for r in lineage_rows)
-        metric_rows = (
-            lineage
-            + p["metric_rows"]
-            + [
-                (p["iteration"], "candidates", "", cand_n),
-                (p["iteration"], "deferred", "", p["deferred_n"]),
-            ]
-        )
-        state.write_local("metrics", p["iteration"], metric_rows, METRICS_SCHEMA)
-        if p["frontier_rows"] > 0 and cand_rows > 0:
-            # estimate for the index pass sizes the POST-combine stream
-            avg_links = max(1.0, cand_rows / p["frontier_rows"])
-        state.commit(
-            p["iteration"],
-            p["rank_offsets"],
-            p["seq_offsets"],
-            done=p["done"],
-            seen_compact=new_compact,
-            bloom_upto=bloom_upto,
-        )
-        p["candidates"].unpersist()
+            state.write_local("metrics", p["iteration"], metric_rows, METRICS_SCHEMA)
+            if p["frontier_rows"] > 0 and cand_rows > 0:
+                # estimate for the index pass sizes the POST-combine stream
+                avg_links = max(1.0, cand_rows / p["frontier_rows"])
+            state.commit(
+                p["iteration"],
+                p["rank_offsets"],
+                p["seq_offsets"],
+                done=p["done"],
+                seen_compact=new_compact,
+                bloom_upto=bloom_upto,
+            )
+        finally:
+            for f in p["write_futs"] + [p["lineage_fut"], p["compact_fut"], p["bloom_fut"]]:
+                if f is not None:
+                    f.cancel()  # no-op on futures already joined
+            p["candidates"].unpersist()
 
     try:
         while frontier_rows > 0 and iteration < max_iterations:
@@ -513,12 +518,15 @@ def crawl(
             driver_frontier = None  # consumed: the Spark path re-collects a small tail
             iteration += 1
             t0 = time.monotonic()
-            # reuse the in-memory (checkpoint-backed) next-frontier plan instead
-            # of a parquet round-trip; deferral chains old-frontier lineage, so
-            # fall back to the committed snapshot whenever rows were deferred
+            # reuse the in-memory (checkpoint-backed) frontier plan instead of
+            # a parquet round-trip; without one, drain first so the committed
+            # snapshot is read after its write and commit
+            t_drain = 0.0
             if carry_frontier is not None:
                 frontier = carry_frontier
             else:
+                _drain_pending()
+                t_drain = time.monotonic() - t0
                 frontier = state.frontier(iteration - 1)
 
             # 1. politeness schedule (Q2) — waves too big to broadcast get the
@@ -574,15 +582,21 @@ def crawl(
             keys = ["run_id", "url_key"]
             maybe_rows, seen_buckets_read, seen_rows_scanned = 0, None, -1
             firsts = bloomf.with_bloom_hashes(with_bucket(firsts))
-            if bloom_active and bloom_upto < (
-                iteration - 2 if pending is not None else iteration - 1
-            ):
-                # lazy activation catch-up: drain any pending iteration so every
-                # seen delta is durable, then fold the uncovered deltas into the
-                # shards in one job; from here on each iteration's shard delta
-                # keeps coverage current (one behind when pipelined — the gap is
-                # exactly the carried delta, handled below)
-                _drain_pending()
+            # durable parquet coverage: ≤ iteration-2 while an iteration is
+            # pending (its delta rides along in memory), else ≤ iteration-1
+            seen_upto = iteration - 2 if pending is not None else iteration - 1
+            if bloom_active and bloom_upto < seen_upto:
+                # lazy activation catch-up: fold the uncovered seen deltas,
+                # the pending wave's included, into the shards in one job. It
+                # reads deltas only: join the pending wave's table writes, not
+                # its compaction, and drop its shard job, whose drain would
+                # overwrite these shards. From here on each iteration's shard
+                # delta keeps coverage current (one behind while a wave is
+                # pending — the gap is exactly the carried delta, handled below)
+                if pending is not None:
+                    for f in pending["write_futs"]:
+                        f.result()
+                    pending["bloom_fut"] = None
                 catch = bloomf.with_bloom_hashes(
                     state.seen_between(bloom_upto, iteration - 1)
                 )
@@ -596,9 +610,6 @@ def crawl(
                     bloom_bc.destroy()
                     bloom_bc = None
                 bloom_upto = iteration - 1
-            # durable parquet coverage: ≤ iteration-2 while an iteration is
-            # pending (its delta rides along in memory), else ≤ iteration-1
-            seen_upto = iteration - 2 if pending is not None else iteration - 1
             if bloom_active:
                 seen_path = "bloom_semi"
                 if bloom_bc is None:
@@ -677,7 +688,7 @@ def crawl(
                 num_buckets=max(64, 4 * parts_for(est_cands)),
             )
             prev_rank_hi = dict(rank_offsets)
-            t_index = time.monotonic() - t0
+            t_index = time.monotonic() - t0 - t_drain
             emit_counts = idx_counts["emit_ok"]
             enq_counts = idx_counts["enqueue_ok"]
             # Q3 opt-in: keep the first frontier_cap fresh enqueues per run
@@ -735,8 +746,8 @@ def crawl(
             # last snapshot plus the deltas after it. A crawl cut by
             # max_iterations still compacts — it may be resumed.
             t_drain0 = time.monotonic()
-            _drain_pending()
-            t_drain = time.monotonic() - t_drain0
+            _drain_pending()  # no-op when the wave drained first
+            t_drain += time.monotonic() - t_drain0
             write_futs = [
                 pool.submit(state.write, "results", iteration, results_df),
                 pool.submit(state.write, "frontier", iteration, next_frontier),
@@ -752,8 +763,8 @@ def crawl(
                 if bloom_active
                 else None
             )
-            # quotas (sync mode only): count the deferred rows now so both the
-            # compaction rule and the committed done flag are exact
+            # quotas: count the deferred rows now so the compaction rule, the
+            # committed done flag and the frontier carry below are exact
             deferred_n = 0 if all(q is None for q in quotas.values()) else deferred.count()
             last_compact = state.manifest.get("seen_compact", -1)
             do_compact = (
@@ -798,26 +809,25 @@ def crawl(
                 "candidates": candidates,
                 "done": enq_n + deferred_n == 0,
             }
-            if not pipelined:
-                _drain_pending()  # sync mode: commit this iteration now
             # next frontier's rank span: fresh enqueues start at the old high
             # water; carried-over deferred rows keep their old (lower) ranks.
             # The in-memory carry is only safe where localCheckpoint blocks are
             # (a) reliable — not on a cluster that can lose executors — and
-            # (b) plan-bounded — quotas chain a window+filter layer per
-            # iteration over the carried plan (ADVICE r01), so carry only in the
-            # no-quota case; otherwise re-read the committed snapshot.
+            # (b) plan-bounded: a wave that deferred nothing has exactly the
+            # fresh rows as its next frontier, whose plan starts at this
+            # wave's checkpointed index pass; carrying deferred rows would
+            # chain the old frontier's plan (ADVICE r01), so such a wave
+            # leaves the next one to drain and re-read the committed snapshot.
             if deferred_n == 0:
                 rank_lo = prev_rank_hi
             carry_frontier = (
-                next_frontier
-                if deferred_n == 0 and all(q is None for q in quotas.values()) and can_carry
+                fresh_frontier.coalesce(parts_for(enq_n))
+                if deferred_n == 0 and can_carry
                 else None
             )
             frontier_rows = enq_n + deferred_n
-            if pending is not None:
-                carry_seen_delta = seen_df
-                carry_seen_rows = wave_rows
+            carry_seen_delta = seen_df
+            carry_seen_rows = wave_rows
             if driver_seen is not None:
                 # hybrid merge-back: fold this Spark wave's keys into the
                 # driver seen set (async — seen_df re-reads checkpoint
@@ -849,21 +859,12 @@ def crawl(
         # a mid-crawl exception (failed Spark job) must not leak the thread
         # pool, in-flight background writes, or the persisted wave (VERDICT
         # r02 "what's wrong" #3 / ADVICE r02). Draining commits the pending
-        # iteration (it completed before the failure); if the drain itself
-        # fails — e.g. the exception WAS one of its write futures — cancel
-        # what never started and release the wave cache instead.
+        # iteration (it completed before the failure); a drain that fails
+        # releases the wave itself, and its error must not mask the first.
         try:
             _drain_pending()
         except Exception:
-            p, pending = pending, None
-            if p is not None:
-                futs = list(p["write_futs"]) + [
-                    p["compact_fut"], p["lineage_fut"], p["bloom_fut"]
-                ]
-                for f in futs:
-                    if f is not None:
-                        f.cancel()
-                p["candidates"].unpersist()
+            pass
         if candidates is not None:
             candidates.unpersist()  # no-op when a drain already released it
         pool.shutdown(wait=True)

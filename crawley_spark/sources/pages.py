@@ -14,7 +14,7 @@ tests/test_engine_plans.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -114,13 +114,3 @@ def pages_from_jsonl(
         "content_type",
         "status",
     )
-
-
-def dedup_latest_snapshot(pages: DataFrame) -> DataFrame:
-    """Common-Crawl corpora carry one row per (url, warc_ts) capture; the
-    fetch join needs url-unique pages. Keep the latest capture. Run once at
-    corpus-prep time, not per iteration."""
-    if "warc_ts" not in pages.columns:
-        return pages.dropDuplicates(["url"])
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc())
-    return pages.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")

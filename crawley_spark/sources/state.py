@@ -302,10 +302,7 @@ class CrawlState:
         return os.path.join(self.root, table, f"iter={iteration}")
 
     def write(self, table: str, iteration: int, df: DataFrame) -> None:
-        if self.catalog:
-            self._iceberg_write(table, iteration, df)
-            return
-        df.write.mode("overwrite").parquet(self._dir(table, iteration))
+        self._write(table, iteration, df)
 
     def write_seen(self, iteration: int, df: DataFrame) -> None:
         """Seen delta — in dir mode written UNpartitioned on purpose: a
@@ -318,10 +315,15 @@ class CrawlState:
         an Iceberg catalog the table is partitioned by (ckpt_iter, bucket)
         from the start — pruned reads come from partition metadata and the
         small-file concern is ``rewrite_data_files`` maintenance."""
+        self._write("seen", iteration, df)
+
+    # the public writers share private bodies rather than calling each other,
+    # so a wrapper around each public name sees one call per write
+    def _write(self, table: str, iteration: int, df: DataFrame) -> None:
         if self.catalog:
-            self._iceberg_write("seen", iteration, df)
+            self._iceberg_write(table, iteration, df)
             return
-        df.write.mode("overwrite").parquet(self._dir("seen", iteration))
+        df.write.mode("overwrite").parquet(self._dir(table, iteration))
 
     @staticmethod
     def _leaf_dirs(d: str, buckets=None) -> list:
@@ -341,6 +343,16 @@ class CrawlState:
             leafs = [e for e in leafs if e in want]
         return [os.path.join(d, e) for e in leafs]
 
+    def _written_dirs(self, table: str, lo: int, hi: int) -> list:
+        """Dirs of ``table`` for iterations lo..hi whose write completed."""
+        dirs = [self._dir(table, i) for i in range(lo, hi + 1)]
+        return [d for d in dirs if os.path.exists(os.path.join(d, "_SUCCESS"))]
+
+    def _read_dirs(self, dirs: list, schema: T.StructType) -> DataFrame:
+        if not dirs:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*dirs)
+
     def seen_dirs(self, upto: int, buckets=None) -> list:
         """All parquet dirs making up the seen table at ``upto``: the latest
         committed compact snapshot (if any) plus the deltas after it."""
@@ -352,10 +364,8 @@ class CrawlState:
                 os.path.join(self.root, "seen_compact", f"upto={compact}"), buckets
             )
             start = compact + 1
-        for i in range(start, upto + 1):
-            d = self._dir("seen", i)
-            if os.path.exists(os.path.join(d, "_SUCCESS")):
-                dirs += self._leaf_dirs(d, buckets)
+        for d in self._written_dirs("seen", start, upto):
+            dirs += self._leaf_dirs(d, buckets)
         return dirs
 
     @staticmethod
@@ -401,6 +411,13 @@ class CrawlState:
         a local createDataFrame costs one Python-worker round-trip per
         default-parallelism partition, ~4s/write at local[32]). Used for the
         tiny driver-side tables: metrics and the iteration-0 bootstrap."""
+        self._write_local(table, iteration, rows, schema)
+
+    def write_local_binary(self, table: str, iteration: int, shards: list) -> None:
+        """[(bucket:int, bitmap:bytes)] → parquet (Bloom shard deltas)."""
+        self._write_local(table, iteration, [(int(b), m) for b, m in shards], BLOOM_STATE_SCHEMA)
+
+    def _write_local(self, table: str, iteration: int, rows: list, schema: T.StructType) -> None:
         if self.catalog:
             self._iceberg_write(
                 table, iteration, self.spark.createDataFrame(rows, schema).coalesce(1)
@@ -409,7 +426,13 @@ class CrawlState:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        _PA = {"string": pa.string(), "long": pa.int64(), "integer": pa.int32(), "boolean": pa.bool_()}
+        _PA = {
+            "string": pa.string(),
+            "long": pa.int64(),
+            "integer": pa.int32(),
+            "boolean": pa.bool_(),
+            "binary": pa.binary(),
+        }
         pa_schema = pa.schema([(f.name, _PA[f.dataType.typeName()]) for f in schema.fields])
         cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
         table_arr = pa.table(
@@ -421,43 +444,10 @@ class CrawlState:
         with open(os.path.join(d, "_SUCCESS"), "w"):
             pass
 
-    def write_local_binary(self, table: str, iteration: int, shards: list) -> None:
-        """[(bucket:int, bitmap:bytes)] → parquet (Bloom shard deltas)."""
-        if self.catalog:
-            self._iceberg_write(
-                table,
-                iteration,
-                self.spark.createDataFrame(
-                    [(int(b), bytearray(m)) for b, m in shards], BLOOM_STATE_SCHEMA
-                ).coalesce(1),
-            )
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        t = pa.table(
-            {
-                "bucket": pa.array([b for b, _ in shards], type=pa.int32()),
-                "bitmap": pa.array([m for _, m in shards], type=pa.binary()),
-            }
-        )
-        d = self._dir(table, iteration)
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(t, os.path.join(d, "part-00000.parquet"))
-        with open(os.path.join(d, "_SUCCESS"), "w"):
-            pass
-
     def _read_upto(self, table: str, schema: T.StructType, upto: int) -> DataFrame:
         if self.catalog:
             return self._iceberg_read(table, schema, upto=upto)
-        dirs = [
-            self._dir(table, i)
-            for i in range(upto + 1)
-            if os.path.exists(os.path.join(self._dir(table, i), "_SUCCESS"))
-        ]
-        if not dirs:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*dirs)
+        return self._read_dirs(self._written_dirs(table, 0, upto), schema)
 
     def results(self, upto: int | None = None) -> DataFrame:
         return self._read_upto("results", RESULTS_SCHEMA, self._upto(upto))
@@ -467,10 +457,7 @@ class CrawlState:
             return self._iceberg_read(
                 "seen", SEEN_SCHEMA, upto=self._upto(upto), buckets=buckets
             )
-        dirs = self.seen_dirs(self._upto(upto), buckets)
-        if not dirs:
-            return self.spark.createDataFrame([], SEEN_SCHEMA)
-        return self.spark.read.schema(SEEN_SCHEMA).parquet(*dirs)
+        return self._read_dirs(self.seen_dirs(self._upto(upto), buckets), SEEN_SCHEMA)
 
     def seen_between(self, after: int, upto: int) -> DataFrame:
         """Seen delta rows for iterations in (after, upto] — reads the raw
@@ -478,14 +465,7 @@ class CrawlState:
         lazy Bloom catch-up at prefilter activation."""
         if self.catalog:
             return self._iceberg_read("seen", SEEN_SCHEMA, upto=upto, after=after)
-        dirs = [
-            self._dir("seen", i)
-            for i in range(after + 1, upto + 1)
-            if os.path.exists(os.path.join(self._dir("seen", i), "_SUCCESS"))
-        ]
-        if not dirs:
-            return self.spark.createDataFrame([], SEEN_SCHEMA)
-        return self.spark.read.schema(SEEN_SCHEMA).parquet(*dirs)
+        return self._read_dirs(self._written_dirs("seen", after + 1, upto), SEEN_SCHEMA)
 
     def metrics(self, upto: int | None = None) -> DataFrame:
         return self._read_upto("metrics", METRICS_SCHEMA, self._upto(upto))
@@ -493,10 +473,7 @@ class CrawlState:
     def frontier(self, iteration: int) -> DataFrame:
         if self.catalog:
             return self._iceberg_read("frontier", FRONTIER_SCHEMA, at=iteration)
-        path = self._dir("frontier", iteration)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return self.spark.createDataFrame([], FRONTIER_SCHEMA)
-        return self.spark.read.schema(FRONTIER_SCHEMA).parquet(path)
+        return self._read_dirs(self._written_dirs("frontier", iteration, iteration), FRONTIER_SCHEMA)
 
     def _upto(self, upto: int | None) -> int:
         return self.manifest["iteration"] if upto is None else upto

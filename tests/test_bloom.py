@@ -191,3 +191,74 @@ def test_bloom_resume_covers_prior_iterations(spark, tmp_path):
     resumed = spark_crawl(spark, pages_to_df(spark, pages), "http://h0.example", cfg,
                           checkpoint_dir=ck, resume=True, bloom_min_seen=0, driver_wave_rows=0)
     assert resumed.result_urls("run0") == want.results
+
+
+def test_bloom_catch_up_leaves_compaction_in_flight(spark, monkeypatch):
+    """The lazy activation catch-up reads seen deltas only: it must not wait
+    for the pending wave's compaction. Compaction is submitted on iteration
+    2 (compact_every=1); Bloom activates on iteration 3 (seen reaches 13
+    keys after iteration 2), whose catch-up reads the deltas while that
+    compaction is still blocked on it."""
+    import threading
+
+    from crawley_spark.sources.state import CrawlState
+
+    read = threading.Event()
+    waited = []
+    real_compact, real_between = CrawlState.compact_seen, CrawlState.seen_between
+
+    def compact_seen(self, upto):
+        if not waited:
+            waited.append(read.wait(10))
+        return real_compact(self, upto)
+
+    def seen_between(self, after, upto):
+        read.set()
+        return real_between(self, after, upto)
+
+    monkeypatch.setattr(CrawlState, "compact_seen", compact_seen)
+    monkeypatch.setattr(CrawlState, "seen_between", seen_between)
+    pages = synth_site()
+    cfg = CrawlConfig(depth=-1, no_head=True)
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    report = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        bloom_min_seen=13, compact_every=1, driver_wave_rows=0,
+    )
+    assert waited == [True], "catch-up waited for the pending compaction"
+    assert report.result_urls("run0") == want.results
+    assert {r["url_key"]: r["url"] for r in report.seen("run0").collect()} == want.seen
+    report.state.cleanup()
+
+
+def test_bloom_activation_on_second_wave_covers_first(spark, tmp_path):
+    """Bloom activating on iteration 2 while iteration 1 is still pending:
+    the next wave's catch-up must fold iteration 1's delta into the shards,
+    in memory and on disk — a resume reads the shards back."""
+    from crawley_spark.sources.state import BLOOM_STATE_SCHEMA
+
+    pages = synth_site()
+    cfg = CrawlConfig(depth=-1, no_head=True)
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    kw = {"bloom_min_seen": 3, "driver_wave_rows": 0}  # seen has 3 keys after iteration 1
+    df = pages_to_df(spark, pages)
+    full = spark_crawl(spark, df, "http://h0.example", cfg, **kw)
+    paths = {r["iter"]: r["key"] for r in full.metrics().filter("metric = 'seen_path'").collect()}
+    assert paths[1] == "broadcast" and paths[2] == "bloom_semi", paths
+    assert full.result_urls("run0") == want.results
+    full.state.cleanup()
+    ck = str(tmp_path / "ck")
+    part = spark_crawl(spark, df, "http://h0.example", cfg, checkpoint_dir=ck, max_iterations=3, **kw)
+    # every committed seen key is in the committed shards
+    upto = part.state.manifest["bloom_upto"]
+    shards = [
+        (r["bucket"], bytes(r["bitmap"]))
+        for r in part.state._read_upto("blooms", BLOOM_STATE_SCHEMA, upto).collect()
+    ]
+    bc = spark.sparkContext.broadcast(bloom.merge_bitmaps(shards))
+    out = bloom.prefilter(bloom.with_bloom_hashes(part.state.seen(upto=upto)), bc).collect()
+    bc.destroy()
+    assert upto == 3 and all(r["_maybe_seen"] for r in out), "committed shards miss seen keys"
+    resumed = spark_crawl(spark, df, "http://h0.example", cfg, checkpoint_dir=ck, resume=True, **kw)
+    assert resumed.result_urls("run0") == want.results
+    assert {r["url_key"]: r["url"] for r in resumed.seen("run0").collect()} == want.seen

@@ -274,16 +274,28 @@ def test_seen_partitioned_layout_and_compaction(spark, tmp_path):
     assert len(pruned) < len(all_rows), "bucket pruning read the whole table"
 
 
-def test_resume_after_simulated_crash(spark, tmp_path, monkeypatch):
-    """Crash inside the pipelined commit window: iteration k+1's table
-    writes are durable but its manifest commit never happened (the engine
-    commits one iteration behind while pipelining). Resume from the stale
-    manifest must replay the uncommitted tail over the leftover dirs
-    (idempotent overwrites) and still match the interpreter exactly."""
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"driver_wave_rows": 0},
+        {"driver_wave_rows": 0, "politeness_budget_ms": 300},
+        {},  # default cut-off: the swallowed commits are driver waves'
+    ],
+    ids=["no_quota", "polite", "driver_wave"],
+)
+def test_resume_after_simulated_crash(spark, tmp_path, monkeypatch, kw):
+    """Crash inside the commit window: iteration k+1's table writes are
+    durable but its manifest commit never happened (a Spark wave on the
+    carried frontier commits one iteration behind; a driver wave writes its
+    tables before it commits). Resume from the stale manifest must replay
+    the uncommitted tail over the leftover dirs (idempotent overwrites) and
+    still match the interpreter exactly — as sets under quotas, whose
+    deferral may permute emission order."""
     from crawley_spark.sources.state import CrawlState
 
+    polite = "politeness_budget_ms" in kw
     pages = synth_site()
-    cfg = CrawlConfig(depth=-1, no_head=True)
+    cfg = CrawlConfig(depth=-1, no_head=True, delay_ms=100 if polite else 0)
     want = interp.crawl(pages, "http://h0.example", cfg)
     ck = str(tmp_path / "ck")
 
@@ -300,16 +312,72 @@ def test_resume_after_simulated_crash(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(CrawlState, "commit", commit_drops_tail)
     crashed = spark_crawl(
         spark, pages_to_df(spark, pages), "http://h0.example", cfg,
-        checkpoint_dir=ck, driver_wave_rows=0,
+        checkpoint_dir=ck, **kw,
     )
     assert crashed.iterations >= 3, "site too small to leave uncommitted dirs"
     monkeypatch.setattr(CrawlState, "commit", real_commit)
+    uncommitted = {
+        r["metric"]: r["iter"]
+        for r in crashed.state.metrics(upto=crashed.iterations)
+        .filter("iter >= 2 AND metric IN ('driver_path', 'deferred') AND value > 0")
+        .collect()
+    }
+    if "driver_wave_rows" not in kw:
+        assert "driver_path" in uncommitted, "no uncommitted driver wave"
+    if polite:
+        assert "deferred" in uncommitted, "no uncommitted deferral"
 
     state = CrawlState(spark, ck)
     assert state.load_manifest() and state.manifest["iteration"] == 1
     resumed = spark_crawl(
         spark, pages_to_df(spark, pages), "http://h0.example", cfg,
-        checkpoint_dir=ck, resume=True, driver_wave_rows=0,
+        checkpoint_dir=ck, resume=True, **dict(kw, driver_wave_rows=0),
+    )
+    if polite:
+        assert set(resumed.result_urls("run0")) == set(want.results)
+    else:
+        assert resumed.result_urls("run0") == want.results
+    got_seen = {r["url_key"]: r["url"] for r in resumed.seen("run0").collect()}
+    assert got_seen == want.seen
+
+
+def test_compaction_failure_leaves_manifest_and_resumes(spark, tmp_path, monkeypatch):
+    """A compaction that wrote its snapshot and then failed: the crawl
+    raises that error, the manifest never points at the orphan snapshot,
+    and a resume over the leftover dirs matches the interpreter."""
+    import os
+
+    from crawley_spark.sources.state import CrawlState
+
+    real = CrawlState.compact_seen
+    failed = []
+
+    def compact_then_fail(self, upto):
+        out = real(self, upto)
+        if not failed:
+            failed.append(upto)
+            raise RuntimeError("injected compaction failure")
+        return out
+
+    monkeypatch.setattr(CrawlState, "compact_seen", compact_then_fail)
+    pages = synth_site()
+    cfg = CrawlConfig(depth=-1, no_head=True)
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    ck = str(tmp_path / "ck")
+    kw = {"compact_every": 1, "driver_wave_rows": 0}
+    with pytest.raises(RuntimeError, match="injected compaction failure"):
+        spark_crawl(
+            spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+            checkpoint_dir=ck, **kw,
+        )
+    assert failed, "no compaction ran"
+    assert os.path.isdir(os.path.join(ck, "seen_compact", f"upto={failed[0]}"))
+    state = CrawlState(spark, ck)
+    assert state.load_manifest()
+    assert state.manifest["seen_compact"] != failed[0]
+    resumed = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        checkpoint_dir=ck, resume=True, **kw,
     )
     assert resumed.result_urls("run0") == want.results
     got_seen = {r["url_key"]: r["url"] for r in resumed.seen("run0").collect()}
@@ -420,13 +488,13 @@ def test_fresh_crawl_skips_startup_reads(spark, tmp_path, monkeypatch):
     assert got_seen == want.seen
 
 
-@pytest.mark.parametrize("polite", [False, True], ids=["pipelined", "sync"])
+@pytest.mark.parametrize("polite", [False, True], ids=["no_quota", "polite"])
 def test_crawl_ending_wave_skips_compaction(spark, tmp_path, monkeypatch, polite):
     """With compact_every=1 every Spark wave from the second on compacts,
     except the one whose next frontier is empty: nothing reads that
     snapshot. A crawl cut by max_iterations still compacts on its last
-    iteration, since it may be resumed. Quotas put the loop in sync mode,
-    where the deferred rows count toward the next frontier."""
+    iteration, since it may be resumed. Under quotas the deferred rows
+    count toward the next frontier."""
     from crawley_spark.sources.state import CrawlState
 
     compacted = []
@@ -508,7 +576,37 @@ def test_exception_mid_crawl_releases_pool_and_cache(spark, monkeypatch):
         jsc.getRDDStorageInfo()[i].name()
         for i in range(len(jsc.getRDDStorageInfo()))
     ]
-    assert not any("mapInPandas" in (n or "") for n in cached), cached
+    assert not any("MapInArrow" in (n or "") for n in cached), cached
+
+
+def test_quota_crawl_reads_frontier_only_after_deferral(spark, monkeypatch):
+    """A Spark wave that deferred nothing carries its fresh rows in memory,
+    quotas or not: the committed frontier snapshot is read only for the
+    bootstrap frontier and after waves that deferred rows."""
+    from crawley_spark.sources.state import CrawlState
+
+    reads = []
+    real = CrawlState.frontier
+
+    def spy(self, iteration):
+        reads.append(iteration)
+        return real(self, iteration)
+
+    monkeypatch.setattr(CrawlState, "frontier", spy)
+    pages = synth_site()
+    cfg = CrawlConfig(depth=-1, no_head=True, delay_ms=100)
+    want = interp.crawl(pages, "http://h0.example", cfg)
+    report = spark_crawl(
+        spark, pages_to_df(spark, pages), "http://h0.example", cfg,
+        politeness_budget_ms=300, driver_wave_rows=0,
+    )
+    deferred = _deferred(report)
+    assert any(v > 0 for v in deferred.values()), "no deferral exercised"
+    assert reads == [0] + sorted(i for i, v in deferred.items() if v > 0), (reads, deferred)
+    assert set(report.result_urls("run0")) == set(want.results)
+    got_seen = {r["url_key"]: r["url"] for r in report.seen("run0").collect()}
+    assert got_seen == want.seen
+    report.state.cleanup()
 
 
 def test_frontier_cap_bounded_queue(spark):
